@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.core.Sessions
 
 /** Per-round benchmark main: times every registered query at the given SF
   * and prints ONE JSON line for the driver. Runs the primary config from
@@ -274,11 +276,7 @@ object Bench {
 
   private def run(cpus: String, sfDir: String, reps: Int)
       : (Double, Seq[(String, Option[Double])], Seq[String]) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Every unpartitioned-window site on the board runs over bounded input
     // (post-limit or ≤1001-row aggregates — CurationQueries:476 k=100,
@@ -291,7 +289,7 @@ object Bench {
     // warm-up outside the timed loop: pays JVM/codegen/parquet-reader
     // startup once so the alphabetically-first query's number reflects the
     // query, not session spin-up (entry() runs the flagship on sf0.001)
-    try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
+    try { SparkEntry.entry(spark).count() } catch { case NonFatal(_) => () }
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def rep(): Option[Double] = {
@@ -301,7 +299,7 @@ object Bench {
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => errors += name; None }
+        catch { case NonFatal(_) => errors += name; None }
       }
       var times = (1 to reps).flatMap(_ => rep())
       if (!errors.contains(name) && times.nonEmpty &&
@@ -473,7 +471,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus(32).toString
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // snapshot path is per-config: only the official config may touch the
     // committed BENCH_LOCAL.json (see snapshotFileName)
@@ -577,7 +575,7 @@ object Bench {
             try java.nio.file.Files.writeString(
               java.nio.file.Paths.get("SUSPECTS.json"),
               s"""{"sf":"$sfDir","cpus":"$cpus","suspects":$items}""" + "\n")
-            catch { case _: Throwable => () } // read-only cwd: same policy as below
+            catch { case NonFatal(_) => () } // read-only cwd: same policy as below
           }
           if (susp.nonEmpty) {
             System.err.println(
@@ -607,7 +605,7 @@ object Bench {
       // the clean baseline is refreshed only under the STRICT eligibility
       // (±12% band, ≤3 inflated queries) — not merely "no alert fired"
       if (guard.cleanEligible) java.nio.file.Files.writeString(cleanPath, fileLine + "\n")
-    } catch { case _: Throwable => () } // read-only cwd must not kill the bench
+    } catch { case NonFatal(_) => () } // read-only cwd must not kill the bench
     println(renderStdout(total, results, errors, sfDir, cpus, reps,
       drawsObj + subtotalsJson + guard.stdoutExtra + recStdoutJson, local4))
   }

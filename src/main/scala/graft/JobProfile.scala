@@ -1,35 +1,41 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Dev tool: run one registered query WARM and print per-job wall times +
-  * per-stage task-time/shuffle metrics, so optimization targets the jobs
-  * that actually cost (guide §1/§7 — measure, don't guess).
+import graft.core.Sessions
+
+/** Dev tool, the one query timer: for each named query, in Bench's draw
+  * shape (entry() warm-up once, then clearCache + count() per draw),
+  * prints its row count, the cold first draw, the median and list of 5
+  * warm draws, and per-job wall times and per-stage task-time/byte
+  * tables of the last warm draw, so optimization targets the jobs that
+  * actually cost. For the plan itself use [[PlanDump]].
   *
-  * Usage: runMain graft.JobProfile <name> <sfDir> */
+  * Usage: runMain graft.JobProfile <sfDir> <name> [name ...]
+  * Env: SPARK_GRAFT_CPUS (default: all cores). */
 object JobProfile {
-  def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val fn = SparkEntry.queries(name)
-    // warm-up run: JIT/codegen/paths paid outside the profiled run
-    fn(spark, dir).count()
-    spark.catalog.clearCache()
+  private val WarmDraws = 5
 
-    case class Stage(id: Int, nameHead: String, tasks: Int, taskTimeMs: Long,
-                     inputMB: Double, shufReadMB: Double, shufWriteMB: Double)
+  private case class Stage(id: Int, nameHead: String, tasks: Int, taskTimeMs: Long,
+                           inputMB: Double, shufReadMB: Double, shufWriteMB: Double)
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: JobProfile <sfDir> <name> [name ...]")
+    val dir = args(0)
+    val names = args.drop(1).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Sessions.local(Sessions.cpus())
+    spark.sparkContext.setLogLevel("ERROR")
+    val sc = spark.sparkContext
+
     val jobStart = scala.collection.mutable.Map.empty[Int, (Long, String)]
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String)]
-    val stages = scala.collection.mutable.ArrayBuffer.empty[Stage]
+    val jobs = ArrayBuffer.empty[(Int, Long, String)]
+    val stages = ArrayBuffer.empty[Stage]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobStart.synchronized {
@@ -54,23 +60,41 @@ object JobProfile {
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    fn(spark, dir).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // listener events are async — drain the bus before detaching or the
-    // trailing onJobEnd/onStageCompleted events are dropped (ADVICE r19)
-    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(listener)
-    println(f"[jobprofile] $name warm wall=$wall%.3fs jobs=${jobs.length}")
-    jobs.sortBy(-_._2).foreach { case (id, ms, d) =>
-      println(f"  job $id%3d ${ms / 1000.0}%7.3fs  $d")
+    sc.addSparkListener(listener)
+    // pays JVM/codegen/parquet-reader start-up once, as Bench does
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
+
+    for (name <- names) {
+      val fn = SparkEntry.queries(name)
+      // one draw: the listener tables keep only this draw's jobs/stages.
+      // Events are async, so drain the bus before clearing (the previous
+      // draw's trailing events) and after the run (this draw's).
+      def draw(): (Long, Double) = {
+        spark.catalog.clearCache()
+        Bridge.waitListenerBusEmpty(sc)
+        jobStart.synchronized { jobStart.clear(); jobs.clear() }
+        stages.synchronized(stages.clear())
+        val t0 = System.nanoTime()
+        val rows = fn(spark, dir).count()
+        val sec = (System.nanoTime() - t0) / 1e9
+        Bridge.waitListenerBusEmpty(sc)
+        (rows, sec)
+      }
+      val (rows, cold) = draw()
+      val warm = Seq.fill(WarmDraws)(draw()._2)
+      val median = warm.sorted.apply(warm.length / 2)
+      println(f"[jobprofile] $name rows=$rows cold=$cold%.3fs warm_median=$median%.3fs " +
+        s"draws=${warm.map(w => f"$w%.3f").mkString(",")} jobs=${jobs.length}")
+      jobs.sortBy(-_._2).foreach { case (id, ms, d) =>
+        println(f"  job $id%3d ${ms / 1000.0}%7.3fs  $d")
+      }
+      println("  stages by task time:")
+      stages.sortBy(-_.taskTimeMs).take(20).foreach { s =>
+        println(f"  stage ${s.id}%4d tasks=${s.tasks}%3d taskTime=${s.taskTimeMs / 1000.0}%8.3fs " +
+          f"in=${s.inputMB}%7.1fMB sr=${s.shufReadMB}%7.1fMB sw=${s.shufWriteMB}%7.1fMB  ${s.nameHead}")
+      }
     }
-    println("  stages by task time:")
-    stages.sortBy(-_.taskTimeMs).take(20).foreach { s =>
-      println(f"  stage ${s.id}%4d tasks=${s.tasks}%3d taskTime=${s.taskTimeMs / 1000.0}%8.3fs " +
-        f"in=${s.inputMB}%7.1fMB sr=${s.shufReadMB}%7.1fMB sw=${s.shufWriteMB}%7.1fMB  ${s.nameHead}")
-    }
+    sc.removeSparkListener(listener)
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.core.Sessions
 
 /** Optimization-round dev tool: dump `.explain("formatted")` for registered
   * queries to files, one per query, without executing them (the static
@@ -19,13 +21,7 @@ object PlanDump {
     val dir = args(0)
     val out = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(out)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     val streaming = SparkEntry.streamingQueries
     val names =
@@ -53,7 +49,7 @@ object PlanDump {
               org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(out.resolve(s"$name.txt"), txt)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           failed += 1
           System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 
 /** Builder-owned BIG-RUNG evidence tool — NOT driver surface. Closes the
   * sweep's EXCLUDED rows with ENGINE-INTERNAL differentials where DuckDB
@@ -27,25 +27,17 @@ import graft.core.Tables
   *           scan (postings/doclens, IVF cells, PQ codebook/invlists/
   *           centroids) vs the Tables-floor target, flagging collapse.
   *
-  * Usage: runMain graft.RungAudit <sfDir> [asof|chunk|srp|lakes ...]
+  * Usage: runMain graft.RungAudit <sfDir> [asof|chunk|srp|lakes|blobs|buckets|gc ...]
   */
 object RungAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val known = Set("asof", "chunk", "srp", "lakes", "blobs", "buckets", "gc",
-      "bandlsh", "q116probe", "timeq", "abq")
-    // bandlsh/q116probe/timeq are TIMING probes (box-dependent), not
-    // correctness audits — they run only when asked for explicitly
-    val modes = if (args.length > 1) args.drop(1).toSet
-                else known - "bandlsh" - "q116probe" - "timeq"
+    val known = Set("asof", "chunk", "srp", "lakes", "blobs", "buckets", "gc")
+    val modes = if (args.length > 1) args.drop(1).toSet else known
     require(modes.subsetOf(known),
       s"unknown mode(s) ${(modes -- known).mkString(", ")} — " +
         s"valid: ${known.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "28")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local(Sessions.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     var failed = false
     def report(name: String, ok: Boolean, detail: String): Unit = {
@@ -59,10 +51,6 @@ object RungAudit {
     if (modes("blobs")) blobs(spark, sfDir, report)
     if (modes("buckets")) buckets(spark, sfDir, report)
     if (modes("gc")) gc(spark, sfDir, report)
-    if (modes("bandlsh")) bandlsh(spark, sfDir, report)
-    if (modes("q116probe")) q116probe(spark, sfDir, report)
-    if (modes("timeq")) timeq(spark, sfDir, report)
-    if (modes("abq")) abq(spark, sfDir, report)
     spark.stop()
     if (failed) sys.exit(1)
   }
@@ -375,170 +363,6 @@ object RungAudit {
         f"perIter=$perIter%.1f (<=3, constant) " +
         f"shuffleMiB=${shuffleWrite.get() / (1024 * 1024)} " +
         f"boundMiB=${bound / (1024 * 1024)} recs=${shuffleRecs.get()}")
-  }
-
-  /** Band-LSH join-strategy A/B (VERDICT r16 task 4): q116 and q33b share
-    * the bandedLshPairs tail; its r15 SMJ→shuffled-hash switch was never
-    * measured on clean interleaved draws (2.03→1.44 claimed, but the only
-    * clean round records straddle a VM change). This probe times both
-    * strategies INTERLEAVED in one session — same JVM, same box, same
-    * minute — via the graft.bandlsh.join system property, reports medians,
-    * and verifies each run actually used the requested join operator and
-    * returned the same row count. INFO output (no hard floor): the
-    * decision rule "keep shuffle_hash iff its median wins" is applied by
-    * the builder reading the record into SCALING.md. */
-  private def bandlsh(spark: SparkSession, sfDir: String,
-                      report: (String, Boolean, String) => Unit): Unit = {
-    val reps = sys.env.getOrElse("GRAFT_AB_REPS", "5").toInt
-    def once(q: String, strategy: String): (Double, Long, String) = {
-      System.setProperty("graft.bandlsh.join", strategy)
-      try {
-        spark.catalog.clearCache()
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        val t0 = System.nanoTime()
-        val n = df.queryExecution.executedPlan.execute().count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val plan = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        (dt, n, plan)
-      } finally System.clearProperty("graft.bandlsh.join")
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    for (q <- Seq("q116_image_neardup", "q33b_neardup_simhash_md5")) {
-      if (SparkEntry.queries.contains(q)) {
-        // warm both paths once (codec lake staging, codegen) outside timing
-        once(q, "merge"); once(q, "shuffle_hash")
-        val draws = (1 to reps).map { _ =>
-          (once(q, "merge"), once(q, "shuffle_hash"))
-        }
-        val (mTimes, hTimes) = (draws.map(_._1._1), draws.map(_._2._1))
-        val rowsOk = draws.forall { case ((_, nm, _), (_, nh, _)) => nm == nh }
-        val planOk = draws.head._1._3.contains("SortMergeJoin") &&
-          draws.head._2._3.contains("ShuffledHashJoin")
-        report(s"bandlsh_ab_$q", rowsOk && planOk,
-          f"merge=${median(mTimes)}%.2fs shuffle_hash=${median(hTimes)}%.2fs " +
-            f"(reps=$reps interleaved; rowsEqual=$rowsOk planShapesOk=$planOk; " +
-            f"winner=${if (median(hTimes) <= median(mTimes)) "shuffle_hash" else "merge"})")
-      }
-    }
-  }
-
-  /** Generic single-query timing probe in the bench's exact draw shape
-    * (entry() warm-up once, then clearCache + DataFrame.count per rep;
-    * cold first draw reported separately, median of 5 warm draws) —
-    * built for the record_suspects guard's named follow-ups, where ONE
-    * flagged query needs a quiet-box draw without paying a full bench
-    * run (first use: q32b's r18 "box wobble" adjudication, re-check
-    * trigger ">1.1 s on a quiet box next round"). Query names come from
-    * GRAFT_TIMEQ (comma-separated registry keys). */
-  private def timeq(spark: SparkSession, sfDir: String,
-                    report: (String, Boolean, String) => Unit): Unit = {
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val names = sys.env.getOrElse("GRAFT_TIMEQ", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    require(names.nonEmpty, "timeq: set GRAFT_TIMEQ=<query>[,<query>…]")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"timeq: unknown queries ${unknown.mkString(", ")}")
-    try { SparkEntry.entry(spark).count(); () } catch { case _: Throwable => () }
-    for (q <- names) {
-      def draw(): Double = {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = draw()
-      val warm = (1 to 5).map(_ => draw())
-      report(s"timeq_$q", true,
-        f"cold=$cold%.2fs warm_median=${median(warm)}%.2fs " +
-          s"draws=${warm.map(w => f"$w%.2f").mkString(",")}")
-    }
-  }
-
-  /** Generic interleaved variant A/B in the bench's draw shape (r20,
-    * VERDICT r19 task 1): a system property selects a code variant inside
-    * a query path; draws alternate variants so box drift hits both legs
-    * equally. Reads GRAFT_AB_PROP (the sys-prop name), GRAFT_AB_VALUES
-    * (comma list; first = current default), GRAFT_TIMEQ (query names),
-    * GRAFT_AB_REPS (default 5). Per query × variant it reports the cold
-    * (first-after-warmup) draw and the interleaved warm median, plus a
-    * row-count equality check across variants. */
-  private def abq(spark: SparkSession, sfDir: String,
-                  report: (String, Boolean, String) => Unit): Unit = {
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val prop = sys.env.getOrElse("GRAFT_AB_PROP",
-      sys.error("abq: set GRAFT_AB_PROP=<system property>"))
-    val values = sys.env.getOrElse("GRAFT_AB_VALUES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(values.length >= 2, "abq: GRAFT_AB_VALUES needs >= 2 comma-separated values")
-    val reps = sys.env.getOrElse("GRAFT_AB_REPS", "5").toInt
-    val names = sys.env.getOrElse("GRAFT_TIMEQ", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    require(names.nonEmpty, "abq: set GRAFT_TIMEQ=<query>[,<query>…]")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"abq: unknown queries ${unknown.mkString(", ")}")
-    try { SparkEntry.entry(spark).count(); () } catch { case _: Throwable => () }
-    for (q <- names) {
-      def draw(v: String): (Double, Long) = {
-        System.setProperty(prop, v)
-        try {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = SparkEntry.queries(q)(spark, sfDir).count()
-          ((System.nanoTime() - t0) / 1e9, n)
-        } finally System.clearProperty(prop)
-      }
-      val cold = values.map(v => v -> draw(v)).toMap
-      val warm = (1 to reps).map(_ => values.map(v => v -> draw(v)))
-      val rowsOk = (warm.flatten ++ cold.toSeq).map(_._2._2).distinct.length == 1
-      val med = values.map(v => v -> median(warm.map(_.toMap.apply(v)._1)))
-      val winner = med.minBy(_._2)._1
-      report(s"abq_${q}_$prop", rowsOk,
-        med.map { case (v, m) => f"$v=${m}%.2fs(cold=${cold(v)._1}%.2f)" }
-          .mkString(" ") +
-          s" reps=$reps rowsEqual=$rowsOk winner=$winner " +
-          s"draws=" + values.map(v =>
-            v + ":" + warm.map(w => f"${w.toMap.apply(v)._1}%.2f").mkString(","))
-            .mkString(" "))
-    }
-  }
-
-  /** The q116 bench-vs-A/B paradox probe (VERDICT r17 task 1): the r17
-    * record measured q116 at 3.94 s while the same round's interleaved
-    * bandlsh A/B measured 2.02-2.05 s on the same box class. This mode
-    * reproduces BOTH protocols in ONE JVM: (a) Bench's exact draw shape
-    * (entry() warm-up, then clearCache + DataFrame.count per rep) with
-    * the FIRST draw kept separate — it carries whatever one-time cost
-    * (staging existence check, first PNG decode wave, page-cache fill,
-    * codegen) the bench's rep 1 pays; (b) five more bench-shape draws
-    * once warm; run alongside `bandlsh` in the same invocation for the
-    * (c) leg. If cold ≈ warm ≈ 2 s, the 3.94 s record was box noise; if
-    * warm draws sit near 4 s here too, the bench pays something this
-    * probe also pays and the gap is protocol-real. */
-  private def q116probe(spark: SparkSession, sfDir: String,
-                        report: (String, Boolean, String) => Unit): Unit = {
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    // decomposed bench draw: DataFrame CONSTRUCTION (staging check +
-    // binaryFile listing + analysis — the part the bandlsh A/B clock
-    // excludes) vs count() execution
-    def draw(): (Double, Double) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries("q116_image_neardup")(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.count()
-      val t2 = System.nanoTime()
-      ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
-    }
-    try { SparkEntry.entry(spark).count(); () } catch { case _: Throwable => () }
-    val cold = draw()
-    val warm = (1 to 5).map(_ => draw())
-    report("q116_bench_protocol", true,
-      f"cold=${cold._1 + cold._2}%.2fs(build=${cold._1}%.2f) " +
-        f"warm_total_median=${median(warm.map(w => w._1 + w._2))}%.2fs " +
-        f"warm_build_median=${median(warm.map(_._1))}%.2fs " +
-        f"warm_count_median=${median(warm.map(_._2))}%.2fs " +
-        s"draws=${warm.map(w => f"${w._1}%.2f+${w._2}%.2f").mkString(",")}")
   }
 
   /** Staging-GC probe (VERDICT r15 task 4): after the bucketed table and

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
 import graft.streaming.{Sessionize, SessionizeTws}
 
 /** Dev tool: scale probe for the two arbitrary-state sessionize paths
@@ -16,7 +16,7 @@ import graft.streaming.{Sessionize, SessionizeTws}
   * store, memory/size bytes) from the query progress.
   *
   * Usage: runMain graft.StreamProbe <sfDir> <tws|fmgws> [batches]
-  * Env: SPARK_GRAFT_CPUS (default 32). Output: one JSON line.
+  * Env: SPARK_GRAFT_CPUS (default: all cores). Output: one JSON line.
   */
 object StreamProbe {
   private val RocksDb =
@@ -27,15 +27,9 @@ object StreamProbe {
     val mode = args(1)
     val batches = if (args.length > 2) args(2).toInt else 8
     require(mode == "tws" || mode == "fmgws", s"mode must be tws|fmgws, got $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (mode == "tws")
-      builder.config("spark.sql.streaming.stateStore.providerClass", RocksDb)
-    val spark = builder.getOrCreate()
+    val cpus = Sessions.cpus()
+    val spark = Sessions.local(cpus, (if (mode == "tws")
+      Seq("spark.sql.streaming.stateStore.providerClass" -> RocksDb) else Nil): _*)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

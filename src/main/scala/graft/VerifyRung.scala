@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.core.Sessions
 
 /** Builder-owned BIG-RUNG dump — NOT driver surface (the driver runs
   * [[Verify]] at sf0.01, where its `coalesce(1)` is harmless cosmetics).
@@ -19,13 +21,7 @@ import org.apache.spark.sql.SparkSession
 object VerifyRung {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus())
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // The marker must only ever reflect THIS dump's completion: a stale
@@ -35,6 +31,9 @@ object VerifyRung {
     // exists to prevent.
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(outDir, "_DUMP_DONE"))
+    // oracles first: the concurrent sweep reads oracle_sql.json at start-up
+    // and must not wait hours for the dump to finish
+    Verify.writeOracleJson(outDir, SparkEntry.oracleSql)
     // Only the oracle-bearing 144: the sweep exists to compare against
     // DuckDB, and the 4 declared rows-only queries (q07/q32/q33/q37 —
     // engine-internal hash families) have nothing to compare; at this
@@ -49,26 +48,12 @@ object VerifyRung {
         try {
           fn(spark, sfDir).write.mode("overwrite").parquet(dir.getAbsolutePath)
           System.err.println(f"[verify-rung] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify-rung] $name failed: ${e.getMessage}")
         }
         spark.catalog.clearCache() // rung frames are big; don't stack caches
       }
     }
-    // same oracle_sql.json the sweep needs (Verify's escape discipline)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{\n", ",\n", "\n}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outDir, "oracle_sql.json"), json)
     // Dump-done marker: the sweep runs CONCURRENTLY with this dump, and
     // a query dir that merely hasn't been created yet is indistinguishable
     // from one whose query threw. Only once this marker exists may the

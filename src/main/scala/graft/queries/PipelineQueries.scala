@@ -808,11 +808,8 @@ object PipelineQueries {
     // partitioned on (band, bkey) by the shared exchange, bucket
     // populations are bounded by the band-key space, and skipping the
     // two per-partition sorts is pure win — equal-key matching needs no
-    // order. The system property is a BUILDER-ONLY A/B knob (RungAudit
-    // `bandlsh` mode measures shuffle_hash vs merge interleaved in one
-    // session); production never sets it.
-    val joinStrategy = System.getProperty("graft.bandlsh.join", "shuffle_hash")
-    a.join(b.hint(joinStrategy), Seq("band", "bkey"))
+    // order (interleaved A/B against sort-merge: SCALING.md).
+    a.join(b.hint("shuffle_hash"), Seq("band", "bkey"))
       .filter(col("id1") < col("id2"))
       .filter(firstCollision)
       .withColumn("hamming", bit_count(col("fp1").bitwiseXOR(col("fp2"))).cast("int"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.core.Tables
 import graft.streaming.EventStreams
@@ -418,7 +419,7 @@ object StreamQueries {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else -1L
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** Partition decision including the unknown-size branch: an unprobeable
     * source keeps FULL parallelism (cores), never 1 — an unprobeable

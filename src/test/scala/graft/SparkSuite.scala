@@ -4,18 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Sessions
+
 /** Shared local session for specs; mirrors the driver's Verify config. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the library's declarative integration path — suites run on an
-    // extensions-injected session like an external user's cluster would
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .appName("graft-test")
-    .getOrCreate()
+  // the library's declarative integration path — suites run on an
+  // extensions-injected session like an external user's cluster would
+  lazy val spark: SparkSession =
+    Sessions.local(4, "spark.sql.extensions" -> "graft.functions.GraftExtensions")
 
   val sfDir = "/root/testdata/sf0.001"
 
