@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Sessions, Tables}
+import graft.core.{Sessions, Staging, Tables}
 
 /** Builder-owned BIG-RUNG evidence tool — NOT driver surface. Closes the
   * sweep's EXCLUDED rows with ENGINE-INTERNAL differentials where DuckDB
@@ -208,12 +208,11 @@ object RungAudit {
         "q158_postings_compact").foreach { q =>
       SparkEntry.queries(q)(spark, sfDir).count()
     }
-    val sfName = new java.io.File(sfDir).getName
-    val roots = new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.matches(
-        s"blobs_(bm25idx2|ivfidx|pqidx|ivfinc|ivfincd|bm25inc|bm25incd|ivfcomp|bm25comp)_${java.util.regex.Pattern.quote(sfName)}_.*"))
+    val roots = Seq("bm25comp", "bm25idx2", "bm25inc", "bm25incd").map((_, "documents")) ++
+      Seq("ivfcomp", "ivfidx", "ivfinc", "ivfincd", "pqidx").map((_, "embeddings"))
     val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    for (root <- roots.sortBy(_.getName);
+    for ((fmt, src) <- roots;
+         root = graft.queries.SourceQueries.stagedBlobRoot(sfDir, fmt, src);
          sub <- root.listFiles().filter(_.isDirectory).sortBy(_.getName)) {
       val df = spark.read.parquet(sub.getAbsolutePath)
       val rows = df.count()
@@ -222,7 +221,7 @@ object RungAudit {
       val target = math.min(shuffleParts, math.max(1L, rows / 2000))
       // a collapse is a FAILURE (exit 1), consistent with the other modes —
       // automation gating rung evidence on the exit code must see it
-      report(s"lake_${root.getName.split("_")(1)}/${sub.getName}",
+      report(s"lake_$fmt/${sub.getName}",
         parts.toLong * 2 >= target,
         f"rows=$rows parts=$parts target=$target bytes=${bytes / 1024}KiB")
     }
@@ -243,16 +242,12 @@ object RungAudit {
         "q160_avro_changelog", "q160b_avro_schema_evolution").foreach { q =>
       SparkEntry.queries(q)(spark, sfDir).count()
     }
-    val sfName = new java.io.File(sfDir).getName
     val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
     for (fmt <- Seq("jpg2", "pngmut", "jsonlzst", "avrocdc", "avrocdc2")) {
-      // newest generation by mtime — a regenerated source parquet leaves
-      // the stale content-addressed lake behind, and name order is
-      // arbitrary hash order; the ensure-step above staged the live one
-      val root = new java.io.File("/root/repo/target").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-        .sortBy(_.lastModified()).lastOption.getOrElse(
-          sys.error(s"blob lake blobs_${fmt}_${sfName}_* not staged"))
+      // the EXACT live generation the ensure-step above read
+      val root = graft.queries.SourceQueries.stagedBlobRoot(sfDir, fmt,
+        if (fmt == "jsonlzst") "events" else "documents")
+      require(root.isDirectory, s"blob lake $root not staged")
       def files(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
       val fs = files(root)
@@ -292,10 +287,8 @@ object RungAudit {
     val shuffleFree = idx >= 0 && !plan.substring(idx).contains("Exchange")
     // resolve the EXACT fingerprinted table the query read (shared name
     // helper — never a stale same-prefix sibling, ADVICE r15)
-    val tbl = graft.queries.RelationalQueries.bucketedTableName(sfDir)
-    val wh = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val tblDir = new java.io.File(wh, tbl)
+    val tbl = Staging.tableName("lineitem_bkt", sfDir, "lineitem")
+    val tblDir = Staging.path("lineitem_bkt", sfDir, "lineitem")
     require(tblDir.isDirectory, s"bucketed table $tbl not staged")
     val bucketFiles = tblDir.listFiles().count(_.getName.endsWith(".parquet"))
     report("bucket_lineitem", shuffleFree && bucketFiles == 8,
@@ -365,30 +358,30 @@ object RungAudit {
         f"boundMiB=${bound / (1024 * 1024)} recs=${shuffleRecs.get()}")
   }
 
-  /** Staging-GC probe (VERDICT r15 task 4): after the bucketed table and
-    * a blob lake are (re)staged, each family must hold exactly ONE live
-    * artifact — old-fingerprint generations are reaped at staging time —
-    * and the sweep stats report the bytes reclaimed this run. */
+  /** Staging-GC probe (VERDICT r15 task 4): after the bucketed table, a
+    * blob lake and a stream root are (re)staged, every family under the
+    * staging root — blob lakes, bucketed tables, stream roots — must hold
+    * exactly ONE live artifact for this corpus (old-fingerprint
+    * generations are reaped at staging time), and the sweep stats report
+    * the bytes reclaimed this run. */
   private def gc(spark: SparkSession, sfDir: String,
                  report: (String, Boolean, String) => Unit): Unit = {
-    // touch the two staging families this process exercises
-    SparkEntry.queries("q121_basket_pairs")(spark, sfDir).count(): Unit
+    Seq("q121_basket_pairs", "q60b_multimodal_binaryfile", "q151_stream_lake_sink").foreach { q =>
+      SparkEntry.queries(q)(spark, sfDir).count(): Unit
+    }
     val sfName = new java.io.File(sfDir).getName
-    val sfTbl = sfName.replace('.', '_')
-    val wh = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val bktGens = Option(wh.listFiles()).getOrElse(Array.empty)
-      .count(f => f.getName.startsWith(s"lineitem_bkt_${sfTbl}_") &&
-        !f.getName.startsWith("."))
-    val target = new java.io.File("/root/repo/target")
-    val families = Option(target.listFiles()).getOrElse(Array.empty)
+    // live artifacts are `<family>_<corpus>_<fingerprint>`; temp dirs are
+    // dot-prefixed
+    val families = Option(Staging.root.listFiles()).getOrElse(Array.empty)
       .map(_.getName)
-      .filter(n => n.startsWith("blobs_") && n.contains(s"_${sfName}_"))
-      .groupBy(_.split(s"_${sfName}_").head)
+      .filter(n => !n.startsWith(".") && n.contains(s"_${sfName}_"))
+      .groupBy(n => n.take(n.lastIndexOf(s"_${sfName}_")))
     val multi = families.filter(_._2.length > 1)
-    val (gcDirs, gcBytes) = graft.core.Staging.sweepStats
-    report("staging_gc", bktGens == 1 && multi.isEmpty,
-      f"bucketGens=$bktGens blobFamilies=${families.size} " +
+    val (gcDirs, gcBytes) = Staging.sweepStats
+    report("staging_gc", families.nonEmpty && multi.isEmpty,
+      f"families=${families.size} " +
+        f"(blobs=${families.keys.count(_.startsWith("blobs_"))} " +
+        f"stream=${families.keys.count(_.startsWith("stream_"))}) " +
         f"multiGenFamilies=${multi.keys.mkString(",")} " +
         f"reclaimedDirs=$gcDirs reclaimedMiB=${gcBytes / (1024 * 1024)}")
   }

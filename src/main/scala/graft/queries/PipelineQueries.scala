@@ -446,52 +446,6 @@ object PipelineQueries {
   }
 
   // ---- q134: day-N+1 dedup served from the PERSISTED bucketed index --------
-  /** Exact fingerprinted names of the dedup-index tables (shared with
-    * tests so they resolve the same artifact, never a stale sibling). */
-  private[queries] def dedupIndexTableName(dir: String, family: String): String =
-    s"${family}_${new java.io.File(dir).getName.replace('.', '_')}_" +
-      graft.core.Staging.hexFingerprint(new java.io.File(s"$dir/documents.parquet"))
-
-  /** Stage a bucketed metastore table once per corpus fingerprint —
-    * q121's atomic-publish discipline, generalized. `ddlCols` is the
-    * external table's column DDL (must match `build`'s schema). */
-  private def stagedBucketedTable(spark: SparkSession, dir: String,
-      family: String, bucketKey: String, ddlCols: String)(
-      build: => DataFrame): DataFrame = {
-    import graft.core.Staging
-    val tbl = dedupIndexTableName(dir, family)
-    if (!spark.catalog.tableExists(tbl)) synchronized {
-      if (!spark.catalog.tableExists(tbl)) {
-        val whRoot = new java.io.File(
-          new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-        val loc = new java.io.File(whRoot, tbl)
-        if (!loc.exists()) {
-          val uuid = java.util.UUID.randomUUID().toString.take(8)
-          val tmpTbl = s"${tbl}_stg_$uuid"
-          val tmpLoc = new java.io.File(whRoot, s".${tbl}_tmp_$uuid")
-          build
-            // align write tasks to buckets: one file per bucket
-            .repartition(8, col(bucketKey))
-            .write.option("path", tmpLoc.getAbsolutePath)
-            .bucketBy(8, bucketKey)
-            .saveAsTable(tmpTbl)
-          spark.sql(s"DROP TABLE `$tmpTbl`")
-          Staging.publish(tmpLoc, loc)
-        }
-        spark.sql(
-          s"""CREATE TABLE `$tbl` ($ddlCols)
-             |USING PARQUET
-             |CLUSTERED BY ($bucketKey)
-             |INTO 8 BUCKETS
-             |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-        val (d, b) = Staging.sweepStale(whRoot,
-          s"${family}_${new java.io.File(dir).getName.replace('.', '_')}_", tbl)
-        Staging.recordSweep(d, b)
-      }
-    }
-    spark.table(tbl)
-  }
-
   /** q101 derives the corpus index in-query per run; this is the
     * production artifact that derivation amortizes into — the standing
     * corpus' dedup features persist as TWO bucketed metastore tables
@@ -509,12 +463,12 @@ object PipelineQueries {
   def dedupFromIndexTable(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"), col("n_chars"))
     def features = dedupFeatures(d.select(col("doc_id"), col("text")))
-    val fpIdx = stagedBucketedTable(spark, dir, "dedup_fpidx", "fp",
-      "fp STRING, old_id BIGINT") {
+    val fpIdx = graft.core.Staging.bucketedTable(spark, "dedup_fpidx", dir,
+      "documents", "fp", Nil, "fp STRING, old_id BIGINT") {
       features.select(col("fp"), col("doc_id").as("old_id"))
     }
-    val blockIdx = stagedBucketedTable(spark, dir, "dedup_blkidx", "block",
-      "block STRING, old_id BIGINT, sh2 ARRAY<BIGINT>") {
+    val blockIdx = graft.core.Staging.bucketedTable(spark, "dedup_blkidx", dir,
+      "documents", "block", Nil, "block STRING, old_id BIGINT, sh2 ARRAY<BIGINT>") {
       features.select(col("block"), col("doc_id").as("old_id"), col("sh").as("sh2"))
     }
     dedupDecide(dedupBatch(d).planCache(), fpIdx, blockIdx)

@@ -469,63 +469,11 @@ object RelationalQueries {
   /** lineitem staged ONCE per corpus fingerprint as a metastore table
     * bucketed+sorted on l_orderkey — the co-location layout q121's pair
     * expansion and q122's edge build both read shuffle-free. */
-  /** Exact fingerprinted name of the bucketed-lineitem table for a
-    * corpus dir — shared with RungAudit's buckets probe so the audit
-    * resolves the SAME artifact the query read, never a stale sibling
-    * (ADVICE r15). */
-  private[graft] def bucketedTableName(dir: String): String =
-    s"lineitem_bkt_${new java.io.File(dir).getName.replace('.', '_')}_" +
-      graft.core.Staging.hexFingerprint(new java.io.File(s"$dir/lineitem.parquet"))
-
-  private def bucketedLineitem(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Staging
-    val tbl = bucketedTableName(dir)
-    if (!spark.catalog.tableExists(tbl)) synchronized {
-      if (!spark.catalog.tableExists(tbl)) {
-        val whRoot = new java.io.File(
-          new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-        val loc = new java.io.File(whRoot, tbl)
-        if (!loc.exists()) {
-          // ATOMIC publish (ADVICE r15): never rm+rewrite the final path —
-          // a concurrent session (bench+verify, parallel suites) could be
-          // mid-read or mid-write there. Write the bucketed files through
-          // a throwaway EXTERNAL table at a dot-prefixed temp location,
-          // drop the metadata (external drop keeps files), then rename the
-          // dir into place; a lost race keeps the winner's copy.
-          val uuid = java.util.UUID.randomUUID().toString.take(8)
-          val tmpTbl = s"${tbl}_stg_$uuid"
-          val tmpLoc = new java.io.File(whRoot, s".${tbl}_tmp_$uuid")
-          Tables.lineitem(spark, dir)
-            .select(col("l_orderkey"), col("l_partkey"))
-            // align write tasks to buckets (same Murmur3 pmod the bucketizer
-            // uses): exactly ONE file per bucket, so the sorted-bucket scan
-            // serves the merge join without a re-sort; at 100 TB the bucket
-            // count is the scaling knob (thousands), 8 matches this corpus
-            .repartition(8, col("l_orderkey"))
-            .write.option("path", tmpLoc.getAbsolutePath)
-            .bucketBy(8, "l_orderkey").sortBy("l_orderkey", "l_partkey")
-            .saveAsTable(tmpTbl)
-          spark.sql(s"DROP TABLE `$tmpTbl`")
-          Staging.publish(tmpLoc, loc)
-        }
-        // register an external bucketed table over the published location;
-        // the bucket spec in the catalog is what lets FileSourceStrategy
-        // serve the merge join from the sorted buckets with zero exchange
-        spark.sql(
-          s"""CREATE TABLE `$tbl` (l_orderkey BIGINT, l_partkey BIGINT)
-             |USING PARQUET
-             |CLUSTERED BY (l_orderkey) SORTED BY (l_orderkey, l_partkey)
-             |INTO 8 BUCKETS
-             |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-        // reap old-fingerprint generations (regenerated corpus) and
-        // orphaned temp dirs — one live artifact per (sf) family
-        val (d, b) = Staging.sweepStale(whRoot,
-          s"lineitem_bkt_${new java.io.File(dir).getName.replace('.', '_')}_", tbl)
-        Staging.recordSweep(d, b)
-      }
+  private def bucketedLineitem(spark: SparkSession, dir: String): DataFrame =
+    graft.core.Staging.bucketedTable(spark, "lineitem_bkt", dir, "lineitem",
+      "l_orderkey", Seq("l_orderkey", "l_partkey"), "l_orderkey BIGINT, l_partkey BIGINT") {
+      Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
     }
-    spark.table(tbl)
-  }
 
   /** The co-located pair expansion both q121 and q122 start from:
     * same-order part pairs (p1 < p2) via the bucket-key self-join —

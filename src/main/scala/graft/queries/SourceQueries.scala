@@ -179,7 +179,8 @@ object SourceQueries {
     import spark.implicits._
     // run-unique target: two concurrent invocations (bench + oracle runner
     // on the same SF) must not interleave their appends/overwrites
-    val coll = s"/root/repo/target/coll_${java.util.UUID.randomUUID()}"
+    val coll = new java.io.File(graft.core.Staging.root,
+      s"coll_${java.util.UUID.randomUUID()}").getAbsolutePath
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
     val schema = docs.schema
     def n(): Long = spark.read.parquet(coll).count()
@@ -301,47 +302,21 @@ object SourceQueries {
   }
 
   /** Content-addressed blob staging (the q60b pattern, shared by every
-    * real-container round trip): the source parquet's (name, length,
-    * mtime) fingerprint plus a format tag key the cache dir — a
+    * real-container round trip): the `blobs_<fmt>` family of
+    * `Staging.staged`, keyed by the source table's fingerprint — a
     * regenerated source or a changed blob format misses the cache, a
     * re-run hits it. `populate` runs the distributed write (a Spark job
-    * with a foreachPartition file sink) into a temp dir, which is then
-    * published with an atomic rename; if a concurrent run won the rename,
-    * theirs is used. On a cluster the blob dir would be DFS; local-mode
-    * it's a shared local dir. */
-  /** The published lake root for (corpus, fmt) WITHOUT populating it —
-    * the exact path stagedBlobs would return. Audits and specs resolve
-    * artifacts through this instead of prefix+mtime scans (ADVICE r15:
-    * CsvQuarantineSpec could pick up a stale generation). */
-  private[graft] def stagedBlobRoot(dir: String, fmt: String,
-      srcTable: String = "documents"): java.io.File = {
-    val sfName = new java.io.File(dir).getName
-    val srcKey = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$dir/$srcTable.parquet"))
-    new java.io.File(s"/root/repo/target/blobs_${fmt}_${sfName}_$srcKey")
-  }
-
+    * with a foreachPartition file sink) into the temp dir Staging
+    * publishes. */
   private[queries] def stagedBlobs(dir: String, fmt: String, srcTable: String = "documents")(
-      populate: java.io.File => Unit): java.io.File = {
-    import graft.core.Staging
-    val sfName = new java.io.File(dir).getName
-    val blobRoot = stagedBlobRoot(dir, fmt, srcTable)
-    if (!blobRoot.exists()) {
-      val staging = new java.io.File(blobRoot.getParentFile,
-        s".blobs_${fmt}_${sfName}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      staging.mkdirs()
-      populate(staging)
-      // atomic publish; on a lost race the winner's artifact is kept
-      Staging.publish(staging, blobRoot)
-      // reap old-fingerprint generations of this family (regenerated
-      // corpus) and any orphaned tmp dirs from crashed runs — exactly
-      // one live artifact per (fmt, sf) family survives
-      val (d, b) = Staging.sweepStale(
-        blobRoot.getParentFile, s"blobs_${fmt}_${sfName}_", blobRoot.getName)
-      Staging.recordSweep(d, b)
-    }
-    blobRoot
-  }
+      populate: java.io.File => Unit): java.io.File =
+    graft.core.Staging.staged(s"blobs_$fmt", dir, srcTable)(populate)
+
+  /** The published lake root stagedBlobs would return, WITHOUT
+    * populating it — what audits and specs resolve artifacts through. */
+  private[graft] def stagedBlobRoot(dir: String, fmt: String,
+      srcTable: String = "documents"): java.io.File =
+    graft.core.Staging.path(s"blobs_$fmt", dir, srcTable)
 
   // --- q60b: real binaryFile ingestion (D8, app.py:162-164) -----------------
   /** The upload path closed for real: each doc is materialized as a

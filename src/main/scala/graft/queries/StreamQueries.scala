@@ -294,8 +294,8 @@ object StreamQueries {
     * q123). FileStreamSource requires a DIRECTORY basePath ("Option
     * 'basePath' must be a directory"), but the driver corpus's
     * events.parquet is a single FILE. Stage it behind a fingerprint-keyed
-    * dir (hard link — zero copy; fallback to copy across filesystems),
-    * the stagedBlobs discipline: a regenerated source misses the key, a
+    * dir (hard link — zero copy; fallback to copy across filesystems)
+    * through Staging.staged: a regenerated source misses the key, a
     * re-run hits it. A directory-shaped events.parquet (other writers)
     * streams directly. The ts handling mirrors Tables.events'
     * footer-adaptive logic (driver corpus is TIMESTAMP(NANOS) parquet →
@@ -307,38 +307,15 @@ object StreamQueries {
     val src = new java.io.File(s"$dir/events.parquet")
     val streamPath =
       if (src.isDirectory) src.getAbsolutePath
-      else {
-        val key = graft.core.Staging.hexFingerprint(src)
-        val sfName = new java.io.File(dir).getName
-        val staged = new java.io.File(
-          s"/root/repo/target/stream_events_${sfName}_$key")
-        val link = new java.io.File(staged, "events.parquet")
-        if (!link.isFile) {
-          staged.mkdirs()
-          try java.nio.file.Files.createLink(link.toPath, src.toPath)
-          catch { case _: java.nio.file.FileAlreadyExistsException => // lost a benign race
-            case _: Exception =>
-              // cross-filesystem fallback: NEVER copy onto the final path —
-              // a JVM death mid-copy would publish a truncated file that the
-              // fingerprint key then reuses forever. Copy to a temp name and
-              // atomic-rename (the stagedBlobs publish discipline).
-              val tmp = new java.io.File(staged,
-                s".events_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-              java.nio.file.Files.copy(src.toPath, tmp.toPath)
-              try java.nio.file.Files.move(tmp.toPath, link.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              catch { case _: java.nio.file.FileAlreadyExistsException =>
-                tmp.delete() // a concurrent run published first
-              }
-          }
-          // reap old-fingerprint stagings of this family (VERDICT r15
-          // task 4) — one live staged dir per (sf) family
-          val (d, b) = graft.core.Staging.sweepStale(
-            staged.getParentFile, s"stream_events_${sfName}_", staged.getName)
-          graft.core.Staging.recordSweep(d, b)
+      else graft.core.Staging.staged("stream_events", dir, "events") { tmp =>
+        val link = new java.io.File(tmp, "events.parquet").toPath
+        // hard link (zero copy); copy across filesystems
+        try java.nio.file.Files.createLink(link, src.toPath)
+        catch { case _: java.io.IOException | _: UnsupportedOperationException =>
+          java.nio.file.Files.copy(src.toPath, link)
         }
-        staged.getAbsolutePath
-      }
+        ()
+      }.getAbsolutePath
     val rawStream = spark.readStream.schema(raw.schema).parquet(streamPath)
     raw.schema("ts").dataType match {
       case LongType         => rawStream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -749,11 +726,7 @@ object StreamQueries {
     * the micro-batch bring-up cost class. */
   def streamLakeSink(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val src = new java.io.File(s"$dir/events.parquet")
-    val sfName = new java.io.File(dir).getName
-    val root = new java.io.File(
-      s"/root/repo/target/stream_sink_${sfName}_${graft.core.Staging.hexFingerprint(src)}")
-    root.mkdirs()
+    val root = graft.core.Staging.stableRoot("stream_sink", dir, "events")
     eventsFileStream(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .writeStream.format("parquet")
@@ -799,9 +772,6 @@ object StreamQueries {
   def streamCdcLww(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import graft.queries.{OlapQueries => OQ}
-    val sfName = new java.io.File(dir).getName
-    val srcFp = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     // the staged change-log stream: four seq-ordered parquet files, one
     // per CDC wave (atomic-publish; a regenerated corpus re-stages)
     val logDir = SourceQueries.stagedBlobs(dir, "cdclog") { staging =>
@@ -810,38 +780,25 @@ object StreamQueries {
       Seq(("upsert-stream", 1), ("priority-upsert-stream", 2),
           ("tombstone-stream", 3), ("insert-stream", 4)).foreach {
         case (src, wave) =>
-          val tmp = new java.io.File(staging, s".wave_$wave")
-          log.filter(col("source") === src).drop("source")
-            .coalesce(1).write.parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(staging, f"wave_$wave%02d.parquet").toPath)
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+          graft.core.Staging.writeParquetFile(
+            log.filter(col("source") === src).drop("source"),
+            new java.io.File(staging, f"wave_$wave%02d.parquet"))
       }
     }
     // checkpoint + state live at a stable fingerprinted path, NOT behind
     // atomic-rename publish (q151's commit-log lesson)
-    val root = new java.io.File(
-      s"/root/repo/target/stream_cdc_${sfName}_$srcFp")
-    root.mkdirs()
+    val root = graft.core.Staging.stableRoot("stream_cdc", dir, "documents")
     val stateRoot = new java.io.File(root, "state")
     stateRoot.mkdirs()
     def gens(): Seq[(Long, java.io.File)] = stateRoot.listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("gen_") &&
         new java.io.File(f, "_SUCCESS").isFile)
       .map(f => (f.getName.stripPrefix("gen_").toLong, f)).toSeq.sortBy(_._1)
-    def writeGen(df: DataFrame, id: Long): Unit = {
-      val target = new java.io.File(stateRoot, s"gen_$id")
-      if (target.isDirectory) return // replayed batch: already merged
-      val tmp = new java.io.File(stateRoot,
-        s".gen_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      df.write.parquet(tmp.getAbsolutePath)
-      try java.nio.file.Files.move(tmp.toPath, target.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost a race
+    // a replayed batch finds its generation already merged and skips
+    def writeGen(df: DataFrame, id: Long): Unit =
+      graft.core.Staging.writeOnce(new java.io.File(stateRoot, s"gen_$id")) { tmp =>
+        df.write.parquet(tmp.getAbsolutePath)
       }
-    }
     // generation 0: the base snapshot (idempotent)
     if (gens().isEmpty)
       writeGen(OQ.cdcBase(spark, dir)
@@ -899,7 +856,7 @@ object StreamQueries {
     * time-quarter waves (maxFilesPerTrigger=1 → four real micro-batches);
     * foreachBatch writes the wave's day-units under `data/w<wave>/`
     * (temp + atomic rename), then commits `manifest_g<n>.avro` =
-    * previous generation + the new units (temp + ATOMIC_MOVE). A
+    * previous generation + the new units (temp + atomic move). A
     * replayed batch finds its committed generation and SKIPS — the
     * idempotent-sink discipline (q162), proven by the spec's
     * delete-checkpoint-and-replay probe. Serving is q161's planner over
@@ -914,9 +871,6 @@ object StreamQueries {
   def streamManifestCommit(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import graft.queries.{OlapQueries => OQ}
-    val sfName = new java.io.File(dir).getName
-    val srcFp = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$dir/events.parquet"))
     // staged wave files: four time-quarter parquet files, wave-tagged so
     // the batch→wave mapping is data-derived, not arrival-order-derived
     val waveDir = SourceQueries.stagedBlobs(dir, "mfstwaves", srcTable = "events") {
@@ -930,34 +884,20 @@ object StreamQueries {
           expr(s"least(3L, ((us - ${t0}L) * 4) div ${tmax - t0 + 1}L)"))
           .select(col("event_id"), col("ts"), col("event_type"),
             col("us"), col("wave"))
-        for (w <- 0L to 3L) {
-          val tmp = new java.io.File(staging, s".wave_$w")
-          waved.filter(col("wave") === w)
-            .coalesce(1).write.parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(staging, f"wave_$w%02d.parquet").toPath)
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-        }
+        for (w <- 0L to 3L)
+          graft.core.Staging.writeParquetFile(waved.filter(col("wave") === w),
+            new java.io.File(staging, f"wave_$w%02d.parquet"))
     }
     // lake + checkpoint at a stable fingerprinted path — the manifest is
     // the atomicity mechanism and records relative paths, but the
     // checkpoint pins absolute source offsets (q151's lesson)
-    val root = new java.io.File(
-      s"/root/repo/target/stream_manifest_${sfName}_$srcFp")
-    root.mkdirs()
+    val root = graft.core.Staging.stableRoot("stream_manifest", dir, "events")
     def genFile(n: Long) = new java.io.File(root, s"manifest_g$n.avro")
-    def commitManifest(n: Long, entries: Seq[Seq[Any]]): Unit = {
-      val tmp = new java.io.File(root,
-        s".mfst_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      java.nio.file.Files.write(tmp.toPath,
-        graft.sources.Avro.encode(OQ.manifestSchema, entries.toIndexedSeq, "deflate"))
-      try java.nio.file.Files.move(tmp.toPath, genFile(n).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp.toPath) // lost a race
+    def commitManifest(n: Long, entries: Seq[Seq[Any]]): Unit =
+      graft.core.Staging.writeOnce(genFile(n)) { tmp =>
+        java.nio.file.Files.write(tmp.toPath, graft.sources.Avro.encode(
+          OQ.manifestSchema, entries.toIndexedSeq, "deflate"))
       }
-    }
     if (!genFile(0).isFile) commitManifest(0, Seq.empty) // the empty table
     val waveSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id",
@@ -979,14 +919,12 @@ object StreamQueries {
         val genId = id + 1 // g0 is the empty table
         if (!genFile(genId).isFile) {
           val wave = batch.agg(min(col("wave"))).head().getLong(0)
-          val dataDir = new java.io.File(root, s"data/w$wave")
-          if (dataDir.isDirectory) // crashed half-commit: rewrite
-            org.apache.commons.io.FileUtils.deleteDirectory(dataDir)
-          val tmp = new java.io.File(root,
-            s"data/.w${wave}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
           val withUnit = batch.withColumn("unit", expr("us div 86400000000"))
-          withUnit.write.partitionBy("unit").parquet(tmp.getAbsolutePath)
-          java.nio.file.Files.move(tmp.toPath, dataDir.toPath)
+          // a crashed half-commit (units landed, manifest not) left this
+          // wave's complete units in place: they are reused, not rewritten
+          graft.core.Staging.writeOnce(new java.io.File(root, s"data/w$wave")) { tmp =>
+            withUnit.write.partitionBy("unit").parquet(tmp.getAbsolutePath)
+          }
           val added = withUnit.groupBy(col("unit"))
             .agg(count(lit(1)).as("n"), min(col("us")).as("mn"),
               max(col("us")).as("mx"))
@@ -1071,9 +1009,6 @@ object StreamQueries {
   def streamDvApply(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val sfName = new java.io.File(dir).getName
-    val srcFp = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$dir/documents.parquet"))
     val lake = SourceQueries.stagedBlobs(dir, "dvstream") { staging =>
       val data = new java.io.File(staging, "data")
       Tables.documents(spark, dir)
@@ -1094,36 +1029,23 @@ object StreamQueries {
       Seq((1, "doc_id % 19 = 3"), (2, "doc_id % 13 = 3"),
           (3, "doc_id % 17 = 2"), (4, "doc_id % 29 = 8")).foreach {
         case (w, pred) =>
-          val tmp = new java.io.File(staging, s".wave_$w")
-          Tables.documents(spark, dir).filter(expr(pred))
-            .select(col("doc_id"))
-            .coalesce(1).write.parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(wavesDir, f"wave_$w%02d.parquet").toPath)
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+          graft.core.Staging.writeParquetFile(
+            Tables.documents(spark, dir).filter(expr(pred)).select(col("doc_id")),
+            new java.io.File(wavesDir, f"wave_$w%02d.parquet"))
       }
     }
-    val root = new java.io.File(s"/root/repo/target/stream_dv_${sfName}_$srcFp")
-    root.mkdirs()
+    val root = graft.core.Staging.stableRoot("stream_dv", dir, "documents")
     val dvRoot = new java.io.File(root, "dvs")
     dvRoot.mkdirs()
     def gens(): Seq[(Long, java.io.File)] = dvRoot.listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("gen_") &&
         new java.io.File(f, "_SUCCESS").isFile)
       .map(f => (f.getName.stripPrefix("gen_").toLong, f)).toSeq.sortBy(_._1)
-    def writeGen(df: DataFrame, id: Long): Unit = {
-      val target = new java.io.File(dvRoot, s"gen_$id")
-      if (target.isDirectory) return // replayed batch: already applied
-      val tmp = new java.io.File(dvRoot,
-        s".gen_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      df.write.parquet(tmp.getAbsolutePath)
-      try java.nio.file.Files.move(tmp.toPath, target.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost a race
+    // a replayed batch finds its generation already applied and skips
+    def writeGen(df: DataFrame, id: Long): Unit =
+      graft.core.Staging.writeOnce(new java.io.File(dvRoot, s"gen_$id")) { tmp =>
+        df.write.parquet(tmp.getAbsolutePath)
       }
-    }
     val dvSchema = StructType(Seq(StructField("fpath", StringType),
       StructField("card", LongType), StructField("dv", BinaryType)))
     val keySchema = StructType(Seq(StructField("doc_id", LongType)))

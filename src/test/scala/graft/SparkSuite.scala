@@ -15,6 +15,13 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The exact live blob lake `fmt` staged from this suite's corpus. */
+  def stagedLake(fmt: String, srcTable: String = "documents"): java.io.File = {
+    val lake = graft.queries.SourceQueries.stagedBlobRoot(sfDir, fmt, srcTable)
+    assert(lake.isDirectory, s"blob lake $lake not staged")
+    lake
+  }
+
   override def afterAll(): Unit = {
     // shared across suites in one forked JVM — do not stop
     super.afterAll()

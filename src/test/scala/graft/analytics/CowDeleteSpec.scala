@@ -19,14 +19,6 @@ class CowDeleteSpec extends SparkSuite {
   // of which ~3 carry victims
   override val sfDir = "/root/testdata/sf0.01"
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def fileKey(f: java.io.File): AnyRef =
     Files.readAttributes(f.toPath,
       classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
@@ -37,8 +29,8 @@ class CowDeleteSpec extends SparkSuite {
     assert(report.nonEmpty && report.forall(_.getAs[Long]("n_deleted") > 0))
     val affected = report.map(r => s"cell=${r.getAs[Long]("cell")}").toSet
 
-    val base = new java.io.File(newestLake("ivfidx"), "cells")
-    val del = new java.io.File(newestLake("ivfgdprd"), "cells")
+    val base = new java.io.File(stagedLake("ivfidx", "embeddings"), "cells")
+    val del = new java.io.File(stagedLake("ivfgdprd", "embeddings"), "cells")
     val baseCells = base.listFiles().filter(_.isDirectory).map(_.getName).toSet
     val delCells = del.listFiles().filter(_.isDirectory).map(_.getName).toSet
     // untouched cells: present, every file the same inode as the base's
@@ -73,7 +65,7 @@ class CowDeleteSpec extends SparkSuite {
 
   test("the victim-cell rewrite read is partition-pruned") {
     SparkEntry.queries("q133_cow_delete")(spark, sfDir).collect()
-    val base = new java.io.File(newestLake("ivfidx"), "cells")
+    val base = new java.io.File(stagedLake("ivfidx", "embeddings"), "cells")
     // re-create the pruned read q133 performs and assert the partition
     // filter reaches the scan (no full-lake file listing in the rewrite)
     val pruned = spark.read.parquet(base.getAbsolutePath)

@@ -10,17 +10,9 @@ import graft.{SparkEntry, SparkSuite}
   * join operator — the whole point of DVs over q163's delete files. */
 class DeletionVectorSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   test("bitmaps round-trip to exactly the victim key set") {
     SparkEntry.queries("q168_deletion_vectors")(spark, sfDir).collect()
-    val lake = newestLake("dvlake")
+    val lake = stagedLake("dvlake")
     // deserialize every sidecar bitmap and expand it back to keys via
     // the (file, ordinal) contract the build wrote it under
     val dvs = spark.read.parquet(s"$lake/dvs")
@@ -54,7 +46,7 @@ class DeletionVectorSpec extends SparkSuite {
 
   test("sidecar bytes are bitmap-scale, not row-record-scale") {
     SparkEntry.queries("q168_deletion_vectors")(spark, sfDir).collect()
-    val lake = newestLake("dvlake")
+    val lake = stagedLake("dvlake")
     val dvs = spark.read.parquet(s"$lake/dvs")
       .select(col("card"), col("dv")).collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).length.toLong))
@@ -73,7 +65,7 @@ class DeletionVectorSpec extends SparkSuite {
       s"DV serve should join nothing:\n${formatted.take(2000)}")
     // and it agrees with a q163-style join read over the same artifacts
     import org.apache.spark.sql.functions.broadcast
-    val lake = newestLake("dvlake")
+    val lake = stagedLake("dvlake")
     val joinRead = {
       val data = spark.read.parquet(s"$lake/data")
         .select(col("doc_id"), col("unit").cast("long").as("unit"),

@@ -12,14 +12,6 @@ import graft.{SparkEntry, SparkSuite}
   * (the serve-equality that lets readers drop the delete joins). */
 class MorCompactSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def fileKey(f: java.io.File): AnyRef =
     Files.readAttributes(f.toPath,
       classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
@@ -28,8 +20,8 @@ class MorCompactSpec extends SparkSuite {
     val report = SparkEntry.queries("q163b_mor_compact")(spark, sfDir).collect()
     assert(report.nonEmpty)
     val affected = report.map(r => s"unit=${r.getAs[Long]("unit")}").toSet
-    val base = new java.io.File(newestLake("morcomp"), "data")
-    val comp = new java.io.File(newestLake("morcompg2"), "data")
+    val base = new java.io.File(stagedLake("morcomp"), "data")
+    val comp = new java.io.File(stagedLake("morcompg2"), "data")
     // the clean generation has no delete artifacts at all
     assert(!new java.io.File(comp.getParentFile, "pos_deletes").exists())
     assert(!new java.io.File(comp.getParentFile, "eq_deletes").exists())

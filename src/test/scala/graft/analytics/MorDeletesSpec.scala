@@ -12,14 +12,6 @@ class MorDeletesSpec extends SparkSuite {
 
   // sf0.001 gives 500 docs over 16 units — every unit populated, both
   // victim families non-empty
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def dataState(lake: java.io.File): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -30,7 +22,7 @@ class MorDeletesSpec extends SparkSuite {
   test("reads subtract delete files; data files are never touched") {
     val out = SparkEntry.queries("q163_mor_deletes")(spark, sfDir)
     out.collect() // stages the lake on first run
-    val lake = newestLake("morlake")
+    val lake = stagedLake("morlake")
     val before = dataState(lake)
     val report = out.collect() // second read: pure MOR serve
     assert(dataState(lake) === before,
@@ -48,7 +40,7 @@ class MorDeletesSpec extends SparkSuite {
 
   test("position deletes carry only (path, pos) but round-trip to the victim keys") {
     SparkEntry.queries("q163_mor_deletes")(spark, sfDir).collect()
-    val lake = newestLake("morlake")
+    val lake = stagedLake("morlake")
     val posDel = spark.read.parquet(s"$lake/pos_deletes")
     assert(posDel.columns.sorted.toSeq === Seq("fname", "pos") ||
       posDel.columns.sorted.toSeq === Seq("fpath", "pos"),

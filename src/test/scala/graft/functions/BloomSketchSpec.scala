@@ -46,11 +46,7 @@ class BloomSketchSpec extends SparkSuite {
 
   test("q166: blooms prune units and the data scan carries partition filters") {
     SparkEntry.queries("q166_bloom_skipping")(spark, sfDir).collect()
-    val sfName = new java.io.File(sfDir).getName
-    val lake = new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_bloomlake_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail("bloom lake not staged"))
+    val lake = stagedLake("bloomlake", "events")
     val blooms = spark.read.parquet(s"$lake/blooms")
     val probes = graft.core.Tables.events(spark, sfDir)
       .filter(col("user_id") % 97 === 13).select(col("user_id")).distinct()

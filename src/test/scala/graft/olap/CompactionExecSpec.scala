@@ -26,8 +26,7 @@ class CompactionExecSpec extends SparkSuite {
 
   test("a second run serves from the staged artifact without rewriting") {
     SparkEntry.queries("q147_compaction_exec")(spark, sfDir).collect()
-    val root = new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.getName.startsWith("blobs_compacted_sf0.001_")).maxBy(_.lastModified)
+    val root = stagedLake("compacted")
     val before = root.listFiles().map(f => f.getName -> f.lastModified).toMap
     SparkEntry.queries("q147_compaction_exec")(spark, sfDir).collect()
     val after = root.listFiles().map(f => f.getName -> f.lastModified).toMap

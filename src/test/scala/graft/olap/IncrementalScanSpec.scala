@@ -9,14 +9,6 @@ import graft.{SparkEntry, SparkSuite}
   * carried-over unit, and its size matches the manifests' stated rows. */
 class IncrementalScanSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def manifest(lake: java.io.File, name: String): Vector[Vector[Any]] = {
     val (_, entries) = graft.sources.Avro.decode(
       java.nio.file.Files.readAllBytes(new java.io.File(lake, name).toPath))
@@ -26,7 +18,7 @@ class IncrementalScanSpec extends SparkSuite {
   test("delta = appended units only; expired units never reappear") {
     val out = SparkEntry.queries("q170_incremental_scan")(spark, sfDir)
     val rows = out.collect()
-    val lake = newestLake("manifestg2")
+    val lake = stagedLake("manifestg2", "events")
     val g1 = manifest(lake, "manifest.avro")
     val g2 = manifest(lake, "manifest_g2.avro")
     val g1Ids = g1.map(_(0).asInstanceOf[Long]).toSet

@@ -11,14 +11,6 @@ import graft.{SparkEntry, SparkSuite}
   * independent recompute of "events minus B's victims". */
 class OccCommitSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def manifest(lake: java.io.File, name: String): Vector[Vector[Any]] = {
     val (_, entries) = graft.sources.Avro.decode(
       java.nio.file.Files.readAllBytes(new java.io.File(lake, name).toPath))
@@ -27,7 +19,7 @@ class OccCommitSpec extends SparkSuite {
 
   test("commit log: three attempts, one true conflict, deleter retried on g2") {
     SparkEntry.queries("q169_commit_conflict")(spark, sfDir).collect()
-    val lake = newestLake("occlake")
+    val lake = stagedLake("occlake", "events")
     val (_, commits) = graft.sources.Avro.decode(
       java.nio.file.Files.readAllBytes(new java.io.File(lake, "commits.avro").toPath))
     assert(commits.length === 3)
@@ -42,7 +34,7 @@ class OccCommitSpec extends SparkSuite {
 
   test("rebase preserves the compaction and shares untouched units by reference") {
     SparkEntry.queries("q169_commit_conflict")(spark, sfDir).collect()
-    val lake = newestLake("occlake")
+    val lake = stagedLake("occlake", "events")
     val g1 = manifest(lake, "manifest_g1.avro")
     val g2 = manifest(lake, "manifest_g2.avro")
     val g3 = manifest(lake, "manifest_g3.avro")

@@ -11,14 +11,6 @@ import graft.{SparkEntry, SparkSuite}
   * rollback. */
 class RollbackCherryPickSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def manifest(lake: java.io.File, name: String): Vector[Vector[Any]] = {
     val (_, entries) = graft.sources.Avro.decode(
       java.nio.file.Files.readAllBytes(new java.io.File(lake, name).toPath))
@@ -35,7 +27,7 @@ class RollbackCherryPickSpec extends SparkSuite {
   test("history surgery is metadata-only: no file written, moved, or touched") {
     val q = SparkEntry.queries("q172_rollback_cherry_pick")(spark, sfDir)
     q.collect() // stages the lake on first run (via q161b's family)
-    val lake = newestLake("manifestg2")
+    val lake = stagedLake("manifestg2", "events")
     val before = lakeState(lake)
     val out = q.collect()
     assert(lakeState(lake) === before,

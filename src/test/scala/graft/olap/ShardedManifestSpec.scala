@@ -7,14 +7,6 @@ import graft.{SparkEntry, SparkSuite}
   * answer, over a genuinely sharded manifest. */
 class ShardedManifestSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   test("distributed planning ≡ driver-side planning, bit for bit") {
     val sharded = SparkEntry.queries("q174_sharded_manifest")(spark, sfDir)
     val driver = SparkEntry.queries("q161_manifest_scan")(spark, sfDir)
@@ -25,7 +17,7 @@ class ShardedManifestSpec extends SparkSuite {
 
   test("the manifest is genuinely sharded and every shard decodes strictly") {
     SparkEntry.queries("q174_sharded_manifest")(spark, sfDir).count()
-    val lake = newestLake("shardman")
+    val lake = stagedLake("shardman", "events")
     val shards = new java.io.File(lake, "manifests").listFiles()
       .filter(_.getName.endsWith(".avro")).sortBy(_.getName)
     assert(shards.length >= 2, s"only ${shards.length} manifest shard(s)")

@@ -8,21 +8,13 @@ import graft.{SparkEntry, SparkSuite}
   * lists no orphans and reports identical numbers. */
 class VacuumSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def manifest(lake: java.io.File, name: String): Vector[Vector[Any]] =
     graft.sources.Avro.decode(java.nio.file.Files.readAllBytes(
       new java.io.File(lake, name).toPath))._2
 
   test("expired units deleted, live units intact, garbage collected, idempotent") {
     val r1 = SparkEntry.queries("q164_vacuum")(spark, sfDir).collect()
-    val lake = newestLake("vacuumlake")
+    val lake = stagedLake("vacuumlake", "events")
     val g1 = manifest(lake, "manifest.avro")
     val g2 = manifest(lake, "manifest_g2.avro")
     val g2Paths = g2.map(_(1).asInstanceOf[String]).toSet

@@ -10,14 +10,6 @@ import graft.{SparkEntry, SparkSuite}
   * non-vacuous in both directions. */
 class WapPublishSpec extends SparkSuite {
 
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def manifest(lake: java.io.File, name: String): Vector[Vector[Any]] = {
     val (_, entries) = graft.sources.Avro.decode(
       java.nio.file.Files.readAllBytes(new java.io.File(lake, name).toPath))
@@ -26,7 +18,7 @@ class WapPublishSpec extends SparkSuite {
 
   test("publish adds exactly the passing units, by reference") {
     val report = SparkEntry.queries("q171_wap_publish")(spark, sfDir).collect()
-    val lake = newestLake("waplake")
+    val lake = stagedLake("waplake")
     val main = manifest(lake, "main.avro")
     val branch = manifest(lake, "branch.avro")
     val g2 = manifest(lake, "main_g2.avro")

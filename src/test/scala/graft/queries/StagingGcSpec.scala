@@ -5,16 +5,25 @@ import graft.core.Staging
 import java.io.File
 
 /** VERDICT r15 task 4: fingerprint-keyed staged artifacts must not
-  * accumulate across corpus regenerations — staging a family against a
-  * CHANGED source reaps the old-fingerprint generation, leaving exactly
-  * one live artifact, while in-flight (young, dot-prefixed) stagings of
-  * concurrent sessions are left alone. */
+  * accumulate across corpus regenerations — staging a family (blob lake,
+  * bucketed table, stream root) against a CHANGED source reaps the
+  * old-fingerprint generation, leaving exactly one live artifact, while
+  * in-flight (young, dot-prefixed) stagings of concurrent sessions are
+  * left alone. */
 class StagingGcSpec extends SparkSuite {
 
-  /** A throwaway corpus dir whose documents.parquet / lineitem.parquet
+  private lazy val tmpRoot: File =
+    java.nio.file.Files.createTempDirectory("gcspec").toFile
+
+  override def afterAll(): Unit = {
+    Staging.rmTree(tmpRoot): Unit
+    super.afterAll()
+  }
+
+  /** A throwaway corpus dir whose documents / lineitem / events tables
     * can be "regenerated" (mtime-bumped) to change the fingerprint. */
   private def tmpCorpus(name: String): File = {
-    val dir = new File(s"/root/repo/target/gcspec_$name")
+    val dir = new File(tmpRoot, s"gcspec_$name")
     Staging.rmTree(dir)
     dir.mkdirs()
     import spark.implicits._
@@ -26,6 +35,13 @@ class StagingGcSpec extends SparkSuite {
       .toDF("l_orderkey", "l_partkey")
       .coalesce(1).write.mode("overwrite")
       .parquet(new File(dir, "lineitem.parquet").getAbsolutePath)
+    // a single FILE, as the generated corpora ship events: streams stage it first
+    Staging.writeParquetFile(
+      Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "view", 1.5),
+          (2L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), "click", 2.0),
+          (3L, java.sql.Timestamp.valueOf("2024-01-01 01:30:00"), "view", 0.5))
+        .toDF("event_id", "ts", "event_type", "value"),
+      new File(dir, "events.parquet"))
     dir
   }
 
@@ -45,7 +61,7 @@ class StagingGcSpec extends SparkSuite {
 
   test("restaging a blob lake after corpus regen leaves exactly one live generation") {
     val corpus = tmpCorpus("blobs")
-    val target = new File("/root/repo/target")
+    val target = Staging.root
     def stage(): File = SourceQueries.stagedBlobs(
       corpus.getAbsolutePath, "gctest") { staging =>
       java.nio.file.Files.write(new File(staging, "blob.bin").toPath, Array[Byte](1, 2, 3))
@@ -65,7 +81,7 @@ class StagingGcSpec extends SparkSuite {
 
   test("a YOUNG in-flight staging dir survives the sweep; an old orphan does not") {
     val corpus = tmpCorpus("tmps")
-    val target = new File("/root/repo/target")
+    val target = Staging.root
     val sfName = corpus.getName
     val young = new File(target, s".blobs_gctest2_${sfName}_tmp_inflight")
     young.mkdirs()
@@ -84,21 +100,44 @@ class StagingGcSpec extends SparkSuite {
 
   test("restaging the bucketed lineitem table after corpus regen leaves one live table dir") {
     val corpus = tmpCorpus("bkt")
-    val wh = new File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    val dir = corpus.getAbsolutePath
     val prefix = s"lineitem_bkt_${corpus.getName}_"
-    RelationalQueries.basketPairs(spark, corpus.getAbsolutePath).count(): Unit
-    val t1 = RelationalQueries.bucketedTableName(corpus.getAbsolutePath)
-    assert(family(wh, prefix) == Seq(t1))
+    RelationalQueries.basketPairs(spark, dir).count(): Unit
+    val (t1, d1) = (Staging.tableName("lineitem_bkt", dir, "lineitem"),
+      Staging.path("lineitem_bkt", dir, "lineitem"))
+    assert(family(Staging.root, prefix) == Seq(d1.getName))
     regenerate(corpus)
-    RelationalQueries.basketPairs(spark, corpus.getAbsolutePath).count(): Unit
-    val t2 = RelationalQueries.bucketedTableName(corpus.getAbsolutePath)
+    RelationalQueries.basketPairs(spark, dir).count(): Unit
+    val (t2, d2) = (Staging.tableName("lineitem_bkt", dir, "lineitem"),
+      Staging.path("lineitem_bkt", dir, "lineitem"))
     assert(t2 != t1, "table fingerprint must change on regeneration")
-    val live = family(wh, prefix)
-    assert(live == Seq(t2), s"exactly one live table dir expected, got $live")
+    val live = family(Staging.root, prefix)
+    assert(live == Seq(d2.getName), s"exactly one live table dir expected, got $live")
     spark.sql(s"DROP TABLE IF EXISTS `$t1`")
     spark.sql(s"DROP TABLE IF EXISTS `$t2`")
-    Staging.rmTree(new File(wh, t2)): Unit
+    Staging.rmTree(d2): Unit
+    Staging.rmTree(corpus): Unit
+  }
+
+  test("rerunning a stream sink after corpus regen leaves one live stream root") {
+    val corpus = tmpCorpus("stream")
+    val dir = corpus.getAbsolutePath
+    def run(): Seq[org.apache.spark.sql.Row] =
+      StreamQueries.streamLakeSink(spark, dir).collect().toSeq
+    val first = run()
+    assert(first.map(_.getAs[Long]("n_events")).sum == 3L)
+    val g1 = Staging.path("stream_sink", dir, "events")
+    assert(new File(g1, "chk").isDirectory, "the sink checkpoints under its root")
+    regenerate(corpus)
+    assert(run() == first, "a regenerated corpus lands the same rows")
+    val g2 = Staging.path("stream_sink", dir, "events")
+    assert(g2.getName != g1.getName, "fingerprint must change on regeneration")
+    for ((fam, g) <- Seq("stream_sink" -> g2,
+        "stream_events" -> Staging.path("stream_events", dir, "events"))) {
+      val live = family(Staging.root, s"${fam}_${corpus.getName}_")
+      assert(live == Seq(g.getName), s"exactly one live $fam generation expected, got $live")
+      Staging.rmTree(g): Unit
+    }
     Staging.rmTree(corpus): Unit
   }
 }

@@ -33,8 +33,7 @@ class IncrementalErSpec extends SparkSuite {
 
   test("the persisted key index is served, not rebuilt, on a second call") {
     SparkEntry.queries("q155_incremental_er")(spark, sfDir).collect()
-    val root = new java.io.File("/root/repo/target").listFiles()
-      .filter(_.getName.startsWith("blobs_erindex_sf0.001_")).maxBy(_.lastModified)
+    val root = stagedLake("erindex", "customer")
     def snap = {
       def walk(f: java.io.File): Seq[(String, Long)] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)

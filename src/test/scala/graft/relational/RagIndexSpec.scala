@@ -26,14 +26,6 @@ class RagIndexSpec extends SparkSuite {
   }
 
   // ---- q130: incremental append contract ----------------------------------
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def fileSnapshot(root: java.io.File): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -54,13 +46,11 @@ class RagIndexSpec extends SparkSuite {
 
   test("q130 append writes only delta files and pushes the term filter into both scans") {
     RagQueries.bm25IncrementalAppend(spark, sfDir).collect()
-    val base = newestLake("bm25inc")
+    val base = stagedLake("bm25inc")
     val before = fileSnapshot(base)
     // force a FRESH append: drop the delta lake, re-run — the base lake
     // must come through byte-identical
-    newestLake("bm25incd").getParentFile.listFiles()
-      .filter(_.getName.startsWith("blobs_bm25incd_"))
-      .foreach(rmr)
+    rmr(stagedLake("bm25incd"))
     val df = RagQueries.bm25IncrementalAppend(spark, sfDir)
     df.collect()
     assert(fileSnapshot(base) === before,

@@ -12,12 +12,8 @@ import graft.core.Tables
   * discipline, not the checkpoint, carries exactly-once. */
 class StreamCdcLwwSpec extends SparkSuite {
 
-  private def stateRoot: java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    val fp = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$sfDir/documents.parquet"))
-    new java.io.File(s"/root/repo/target/stream_cdc_${sfName}_$fp")
-  }
+  private def stateRoot: java.io.File =
+    graft.core.Staging.path("stream_cdc", sfDir, "documents")
 
   test("streamed LWW apply equals the batch MERGE exactly") {
     val streamed = SparkEntry.queries("q162_stream_cdc_lww")(spark, sfDir)

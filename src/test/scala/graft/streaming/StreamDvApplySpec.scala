@@ -11,20 +11,8 @@ import graft.core.Tables
   * batch over completed generations as a no-op. */
 class StreamDvApplySpec extends SparkSuite {
 
-  private def stateRoot: java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    val fp = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$sfDir/documents.parquet"))
-    new java.io.File(s"/root/repo/target/stream_dv_${sfName}_$fp")
-  }
-
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
+  private def stateRoot: java.io.File =
+    graft.core.Staging.path("stream_dv", sfDir, "documents")
 
   test("the generation ladder is complete and per-file monotone") {
     SparkEntry.queries("q173_stream_dv_apply")(spark, sfDir).count()
@@ -54,7 +42,7 @@ class StreamDvApplySpec extends SparkSuite {
 
   test("delete waves never touch data files") {
     SparkEntry.queries("q173_stream_dv_apply")(spark, sfDir).count()
-    val lake = newestLake("dvstream")
+    val lake = stagedLake("dvstream")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
     val before = walk(new java.io.File(lake, "data"))

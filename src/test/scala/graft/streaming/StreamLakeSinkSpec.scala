@@ -27,8 +27,7 @@ class StreamLakeSinkSpec extends SparkSuite {
 
   test("uncommitted orphan files are invisible through the commit log") {
     SparkEntry.queries("q151_stream_lake_sink")(spark, sfDir).collect()
-    val dataDir = new java.io.File("/root/repo/target").listFiles()
-      .filter(_.getName.startsWith("stream_sink_sf0.001_")).maxBy(_.lastModified)
+    val dataDir = graft.core.Staging.path("stream_sink", sfDir, "events")
     val data = new java.io.File(dataDir, "data")
     // plant an orphan: a valid parquet part NOT recorded by any committed
     // batch — a crashed task's leftovers; readers must never see its rows

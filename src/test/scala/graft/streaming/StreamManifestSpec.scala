@@ -11,12 +11,8 @@ import graft.{SparkEntry, SparkSuite}
   * uncommitted generation is invisible to the planner. */
 class StreamManifestSpec extends SparkSuite {
 
-  private def root(): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    val fp = graft.core.Staging.hexFingerprint(
-      new java.io.File(s"$sfDir/events.parquet"))
-    new java.io.File(s"/root/repo/target/stream_manifest_${sfName}_$fp")
-  }
+  private def root(): java.io.File =
+    graft.core.Staging.path("stream_manifest", sfDir, "events")
 
   private def manifests(r: java.io.File): Seq[java.io.File] =
     r.listFiles().filter(_.getName.matches("manifest_g\\d+\\.avro"))

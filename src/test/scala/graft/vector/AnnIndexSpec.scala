@@ -23,14 +23,6 @@ class AnnIndexSpec extends SparkSuite {
   }
 
   // ---- q129: incremental append contract ----------------------------------
-  private def newestLake(fmt: String): java.io.File = {
-    val sfName = new java.io.File(sfDir).getName
-    new java.io.File("/root/repo/target").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"blobs_${fmt}_${sfName}_"))
-      .sortBy(_.lastModified()).lastOption
-      .getOrElse(fail(s"lake blobs_${fmt}_${sfName}_* not staged"))
-  }
-
   private def fileSnapshot(root: java.io.File): Map[String, (Long, Long)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -46,19 +38,17 @@ class AnnIndexSpec extends SparkSuite {
     import graft.SparkEntry
     val run = SparkEntry.queries("q129_ivf_index_append")
     run(spark, sfDir).collect()
-    val base = newestLake("ivfinc")
+    val base = stagedLake("ivfinc", "embeddings")
     val before = fileSnapshot(base)
     // force a FRESH append: drop the delta lake, re-run — the base index
     // must come through byte-identical (same paths, sizes, mtimes)
-    newestLake("ivfincd").getParentFile.listFiles()
-      .filter(_.getName.startsWith(s"blobs_ivfincd_"))
-      .foreach(rmr)
+    rmr(stagedLake("ivfincd", "embeddings"))
     val out = run(spark, sfDir).collect()
     assert(fileSnapshot(base) === before,
       "the incremental append modified base index files")
     // the re-created delta holds only cell-partitioned invlist dirs whose
     // cells are a subset of the base cells (every centroid owns itself)
-    val delta = newestLake("ivfincd")
+    val delta = stagedLake("ivfincd", "embeddings")
     def cells(root: java.io.File): Set[String] =
       new java.io.File(root, "cells").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell=")).map(_.getName).toSet
@@ -72,9 +62,9 @@ class AnnIndexSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     SparkEntry.queries("q129_ivf_index_append")(spark, sfDir).collect()
     val delta = spark.read.parquet(
-      new java.io.File(newestLake("ivfincd"), "cells").getAbsolutePath)
+      new java.io.File(stagedLake("ivfincd", "embeddings"), "cells").getAbsolutePath)
     val base = spark.read.parquet(
-      new java.io.File(newestLake("ivfinc"), "cells").getAbsolutePath)
+      new java.io.File(stagedLake("ivfinc", "embeddings"), "cells").getAbsolutePath)
     val queries = base.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("n").as("qn"), col("cell"))
