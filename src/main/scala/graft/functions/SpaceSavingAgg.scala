@@ -17,9 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Space-Saving heavy-hitter sketch (Metwally et al. 2005) as a raw
   * Catalyst `TypedImperativeAggregate` — the imperative-buffer aggregate
   * kind (binary-serialized state, partial/final merge at the physical
-  * aggregation layer), next to the typed `Aggregator` (MmrAggregator)
-  * and codegen `Expression`s (DotProductExpr, BigramCodesExpr) already
-  * on the §2.8 surface.
+  * aggregation layer), like MmrAgg, next to the codegen `Expression`s
+  * (DotProductExpr, BigramCodesExpr) already on the §2.8 surface.
   *
   * Semantics: at most `capacity` counters. A present key increments its
   * counter; a new key under capacity starts at 1; at capacity the

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.VectorFns
-import graft.vector.{Mmr, MmrAggregator}
+import graft.vector.Mmr
 
 /** The agentic layer as data (SURVEY §3 E2): MMR-diversified retrieval and
   * the four-way answer router expressed as one DataFrame with a `route`
@@ -25,39 +24,15 @@ object AgentQueries {
     * (q17's bit-exact rank ordering is the standing proof), so the
     * selection sequence matches bit-for-bit — verified at sf0.01 and the
     * sf1 rung. MmrSpec's golden/property tests still cover the general
-    * semantics (λ sweeps, anti-correlated bonus, tie-breaks). */
+    * semantics (λ sweeps, anti-correlated bonus, tie-breaks), and its
+    * parity tests pin the one-aggregate plan of [[Mmr.mmrRerank]] to the
+    * top-fetch_k window it replaced. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val cands = emb.select(col("vec_id"), col("embedding").as("cvec"))
     Mmr.mmrRerank(queries, cands, k = 5, fetchK = 20, lambda = 0.5)
-      .select(col("query_id"), col("vec_id"),
-        round(col("mmr_score"), 6).as("mmr_score"), col("mmr_rank"))
-      .orderBy(col("query_id"), col("mmr_rank"))
-  }
-
-  /** O18 via the partial-aggregation path: the same MMR semantics as
-    * [[mmrRerank]] but through the typed `MmrAggregator` UDAF, whose
-    * buffer trims to fetch_k BEFORE the shuffle — at scale each map task
-    * ships ≤20 candidates per query instead of its whole score set.
-    * Parity with the flatMapGroups path is pinned by MmrAggregatorSpec
-    * AND by sharing q18's recursive-CTE oracle in the driver gate. */
-  def mmrAggRerank(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v"))
-    val queries = emb.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val scored = emb.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        VectorFns.cosine(col("qv"), col("v")).as("rel"), col("v"))
-      .as[(Long, Long, Double, Array[Double])]
-    scored.groupByKey(_._1)
-      .mapValues { case (_, id, rel, vec) => MmrAggregator.Cand(id, rel, vec) }
-      .agg(new MmrAggregator(k = 5, fetchK = 20, lambda = 0.5).toColumn)
-      .flatMap { case (qid, picks) => picks.map(p => (qid, p.id, p.score, p.rank)) }
-      .toDF("query_id", "vec_id", "mmr_score", "mmr_rank")
       .select(col("query_id"), col("vec_id"),
         round(col("mmr_score"), 6).as("mmr_score"), col("mmr_rank"))
       .orderBy(col("query_id"), col("mmr_rank"))
@@ -158,13 +133,10 @@ object AgentQueries {
 
   def all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q18_mmr" -> ((s, d) => mmrRerank(s, d)),
-    "q18b_mmr_agg" -> ((s, d) => mmrAggRerank(s, d)),
     "q24_router" -> ((s, d) => routerDecision(s, d))
   )
 
-  /** Recursive-CTE greedy MMR (see [[mmrRerank]] Scaladoc). Shared by
-    * q18 and q18b — the UDAF path is bit-parity with the flatMapGroups
-    * path (MmrAggregatorSpec), so one oracle proves both. */
+  /** Recursive-CTE greedy MMR (see [[mmrRerank]] Scaladoc). */
   val mmrOracle: String =
     """WITH RECURSIVE
       |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
@@ -202,7 +174,6 @@ object AgentQueries {
 
   def oracles: Map[String, String] = Map(
     "q18_mmr" -> mmrOracle,
-    "q18b_mmr_agg" -> mmrOracle,
     "q24_router" -> routerDecisionOracle
   )
 }

@@ -1,25 +1,34 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.functions.VectorFns
+import graft.functions.{MmrAgg, VectorFns}
 
 /** O18 — Maximal Marginal Relevance re-rank (SURVEY §2.3).
   *
   * Reference: `search_type="mmr"`, k=5, fetch_k=20, lambda_mult=0.5
-  * (`/root/reference/app.py:261-267`): fetch the 20 nearest, then greedily
-  * pick 5 maximizing `λ·sim(q,d) − (1−λ)·max_{s∈selected} sim(d,s)`.
+  * (`app.py:261-267`): fetch the 20 nearest, then greedily pick 5
+  * maximizing `λ·sim(q,d) − (1−λ)·max_{s∈selected} sim(d,s)`.
   *
-  * Spark shape (SURVEY §4): the candidate stage is the broadcast top-k
-  * (one shuffle, WindowGroupLimit); the greedy stage is inherently
-  * sequential PER QUERY, so object code is confined to ≤fetch_k rows per
-  * group via `groupByKey.flatMapGroups` — at any scale each group is ≤20
-  * rows, so this never collects to the driver and never breaks the
-  * partition-parallelism across queries.
+  * Spark shape: one aggregate. The questions are broadcast and cross-joined
+  * with the candidates, the cosine is scored in whole-stage codegen, and
+  * `groupBy(query_id)` runs [[graft.functions.MmrAgg]], which keeps the top
+  * fetch_k (cosine DESC, vec_id ASC) per question in a bounded buffer and
+  * runs [[select]] on it in `eval`. The partial aggregate cuts each map
+  * task's rows to ≤ fetch_k per question before the one shuffle; there is
+  * no window, no sort of the vectors and no typed-object stage.
+  *
+  * Scale note: `ObjectHashAggregate` holds one buffer per question and
+  * falls back to sort-based aggregation when a task sees more than
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128)
+  * questions. A buffer that then spills is at most fetch_k × dim × 8 B:
+  * 160 KB per question at fetch_k = 20 and 1024-d.
   */
 object Mmr {
 
@@ -73,34 +82,34 @@ object Mmr {
   }
 
   /** DataFrame operator: queries(query_id, qvec) × cands(vec_id, cvec) →
-    * (query_id, vec_id, mmr_score DOUBLE, mmr_rank INT), k rows per query. */
+    * (query_id, vec_id, mmr_score DOUBLE, mmr_rank INT), min(k, fetchK, n)
+    * rows per query over its n candidates. */
   def mmrRerank(queries: DataFrame, cands: DataFrame,
                 k: Int = 5, fetchK: Int = 20, lambda: Double = 0.5): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-
-    val q = queries
-      .withColumn("qvec", VectorFns.asDouble(col("qvec")))
-      .withColumn("qnorm", VectorFns.normL2(col("qvec")))
-    val c = cands
-      .withColumn("cvec", VectorFns.asDouble(col("cvec")))
-      .withColumn("cnorm", VectorFns.normL2(col("cvec")))
-
-    // candidate stage = top-fetchK per query, vectors carried through
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    val fetched = c.crossJoin(broadcast(q))
+    // a null query_id fails loud, and the output query_id is non-nullable
+    val q = queries.select(
+      Bridge.column(AssertNotNull(Bridge.expression(col("query_id").cast("long")))).as("query_id"),
+      doubles(queries, "qvec").as("qvec"))
+      .withColumn("qnorm", norm(col("qvec")))
+    val c = cands.select(col("vec_id").cast("long").as("vec_id"), doubles(cands, "cvec").as("cvec"))
+      .withColumn("cnorm", norm(col("cvec")))
+    c.crossJoin(broadcast(q))
       .withColumn("cosine", VectorFns.safeCosine(VectorFns.dot(col("qvec"), col("cvec")), col("qnorm"), col("cnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= fetchK)
-      .select(col("query_id").cast("long"), col("vec_id").cast("long"),
-        col("cosine"), col("cvec"))
-
-    fetched.as[(Long, Long, Double, Seq[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (qid, rows) =>
-        val cs = rows.map { case (_, id, rel, vec) => (id, rel, vec.toArray) }.toSeq
-        Mmr.select(cs, k, lambda).map { case (id, score, rank) => (qid, id, score, rank) }
-      }
-      .toDF("query_id", "vec_id", "mmr_score", "mmr_rank")
+      .groupBy("query_id")
+      .agg(MmrAgg.mmr(col("vec_id"), col("cosine"), col("cvec"), k, fetchK, lambda).as("picks"))
+      .select(col("query_id"), inline(col("picks")))
   }
+
+  /** `name` as ARRAY<DOUBLE>; an identity cast of a column that already is
+    * one would be a `transform` that leaves whole-stage codegen and copies
+    * every vector. */
+  private def doubles(df: DataFrame, name: String): Column = df.schema(name).dataType match {
+    case ArrayType(DoubleType, _) => col(name)
+    case _ => VectorFns.asDouble(col(name))
+  }
+
+  /** L2 norm as `sqrt(dot(v, v))`: the same left-to-right fold as
+    * `VectorFns.normL2`, so the result is bit-identical, but one codegen
+    * loop instead of a higher-order `aggregate`. */
+  private def norm(v: Column): Column = sqrt(VectorFns.dot(v, v))
 }
