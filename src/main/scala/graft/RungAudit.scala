@@ -139,24 +139,15 @@ object RungAudit {
   private def srp(spark: SparkSession, sfDir: String,
                   report: (String, Boolean, String) => Unit): Unit = {
     import graft.functions.VectorFns
-    import org.apache.spark.sql.expressions.Window
     val t0 = System.nanoTime()
     val res = SparkEntry.queries("q36b_ann_srp_md5")(spark, sfDir)
       .collect() // columns: (query_id, vec_id, cosine, rank)
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    // exact brute-force top-5 over ALL vectors, engine-side (3 × N dots)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v"))
       .withColumn("n", VectorFns.normL2(col("v")))
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    val exact = e.crossJoin(broadcast(qvecs))
-      .withColumn("cosine",
-        VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")))
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), round(col("cosine"), 6).as("cosine"))
+    // exact brute-force top-5 over ALL vectors (q17), engine-side (3 × N dots)
+    val exact = graft.queries.VectorQueries.topkCosine(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // (a) bit-exact cosine witness: every returned pair re-scored from raw
     // vectors must round to the same 6 decimals

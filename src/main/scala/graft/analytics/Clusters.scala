@@ -35,10 +35,11 @@ object Clusters {
     * near-dup graph chains (A~B~C~… with no short-cuts) has diameter
     * O(chain length); at 100 TB that calls for the large-star/small-star
     * alternation (Kiveris et al., "Connected Components in MapReduce"),
-    * which contracts in O(log² n) rounds. Not implemented here because
-    * every dedup caller produces bounded-diameter graphs and the
-    * strict guard converts the wrong-graph case into an explicit error
-    * rather than a wrong answer. */
+    * which contracts in O(log² n) rounds: that is
+    * [[connectedComponentsStarContraction]], below. This loop stays the
+    * default because every dedup caller produces bounded-diameter graphs
+    * and the strict guard converts the wrong-graph case into an explicit
+    * error rather than a wrong answer. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
                           strict: Boolean = true): DataFrame = {
     // r20: the caller's pair pipeline is often the query's hottest

@@ -8,6 +8,7 @@ import graft.analytics.Sketches
 import graft.core.Caching._
 import graft.core.Tables
 import graft.functions.VectorFns
+import graft.vector.{Pq, TopK}
 
 /** Training-data-pipeline operators (builder mandate + VERDICT.md): exact
   * dedup, near-dup via n-gram Jaccard / MinHash-LSH / SimHash, embedding
@@ -1035,19 +1036,8 @@ object PipelineQueries {
       .planCache()
   }
 
-  def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = ivfAssigned(spark, dir)
-    val queries = assigned.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"), col("cell"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    queries.join(assigned, Seq("cell"))
-      .withColumn("cosine", VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")))
-      .withColumn("rank", row_number().over(wq).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(col("cosine"), 6).as("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def annIvf(spark: SparkSession, dir: String): DataFrame =
+    ivfProbe(ivfAssigned(spark, dir))
 
   val annIvfOracle: String =
     """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1100,14 +1090,9 @@ object PipelineQueries {
   private def ivfProbe(indexed: DataFrame): DataFrame = {
     val queries = indexed.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"), col("cell"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    indexed.join(broadcast(queries), Seq("cell"))
-      .withColumn("cosine", VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")))
-      .withColumn("rank", row_number().over(wq).cast("int"))
-      .filter(col("rank") <= 5)
+    TopK.rankByCosine(indexed.join(broadcast(queries), Seq("cell"))
       .select(col("query_id"), col("vec_id"), col("cell"),
-        round(col("cosine"), 6).as("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+        VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")).as("cosine")), k = 5)
   }
 
   def annIvfFromIndex(spark: SparkSession, dir: String): DataFrame =
@@ -1987,6 +1972,13 @@ object PipelineQueries {
       |FROM documents GROUP BY 1 ORDER BY unit""".stripMargin
 
   // ---- ANN: 1-bit sign quantization + Hamming shortlist --------------------
+  /** The ANN ladder's question batch — the 3 lowest vec_ids — with norms,
+    * for the rungs whose shortlist re-ranks against (vec_id, v, n):
+    * (query_id, qv, qn). */
+  private def annQuestions(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
+
   /** Binary-quantized ANN: each d-dim vector compresses to ceil(d/64)
     * longs of sign bits — 64× smaller than float32, the most aggressive
     * of the quantization ladder (float32 → int8 (q73) → PQ bytes (q38) →
@@ -2021,16 +2013,7 @@ object PipelineQueries {
       .withColumn("hrn", row_number().over(wh))
       .filter(col("hrn") <= 20)
       .select(col("query_id"), col("vec_id"), col("hamming"))
-    val qv = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
-    val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    shortlist.join(e, Seq("vec_id")).join(broadcast(qv), Seq("query_id"))
-      .withColumn("cosine", VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")))
-      .withColumn("rank", row_number().over(wr).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), col("hamming"),
-        round(col("cosine"), 6).as("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    TopK.rerank(shortlist, annQuestions(e), e, k = 5)
   }
 
   val annHammingOracle: String =
@@ -2215,17 +2198,7 @@ object PipelineQueries {
       .select(col("bucket"), col("vec_id").as("query_id"))
     val candIds = queries.join(exploded, Seq("bucket"))
       .select(col("query_id"), col("vec_id")).distinct()
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    candIds
-      .join(broadcast(qvecs), Seq("query_id"))
-      .join(e.select(col("vec_id"), col("v"), col("n")), Seq("vec_id"))
-      .withColumn("cosine", VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")))
-      .withColumn("rank", row_number().over(wq).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    TopK.rerank(candIds, annQuestions(e), e, k = 5)
   }
 
   // ---- ANN: SRP-LSH, engine-portable projections ----------------------------
@@ -2270,17 +2243,7 @@ object PipelineQueries {
       .select(col("band"), col("bkey"), col("vec_id").as("query_id"))
     val candIds = queries.join(exploded, Seq("band", "bkey"))
       .select(col("query_id"), col("vec_id")).distinct()
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n").as("qn"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    candIds
-      .join(broadcast(qvecs), Seq("query_id"))
-      .join(e.select(col("vec_id"), col("v"), col("n")), Seq("vec_id"))
-      .withColumn("cosine", VectorFns.safeCosine(VectorFns.dot(col("qv"), col("v")), col("qn"), col("n")))
-      .withColumn("rank", row_number().over(wq).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    TopK.rerank(candIds, annQuestions(e), e, k = 5)
   }
 
   val annSrpPortableOracle: String = {
@@ -2335,56 +2298,20 @@ object PipelineQueries {
     * determinism, ADC-vs-reconstruction consistency, and the recall
     * floor vs exact top-5. */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
-    val M = 8; val K = 16; val dsub = 8
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        VectorFns.l2Normalize(VectorFns.asDouble(col("embedding"))).as("v"))
-      .planCache()
-    // cache: the subvector explosion feeds init, every Lloyd round, the
-    // encode pass, and the query tables — without it each training job
-    // re-scans and re-normalizes the parquet source
-    val sub = e.select(col("vec_id").as("id"),
-      posexplode(expr(s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $dsub + 1, $dsub))"))
-        .as(Seq("m", "sv")))
-      .planCache()
-    // deterministic seeding: subspace centroids = first K vectors by id
-    val init = sub.filter(col("id") < K)
-      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
-    val cb = graft.vector.Pq.trainCodebook(sub, init, iters = 3)
-    // r20: codes and the per-query ADC tables are NARROW projections
-    // against the driver-resident codebook (PqNearestExpr / adcTable) —
-    // the encode regroup exchange, the codebook broadcast builds, and the
-    // dt join+regroup of the r19 shape are gone; same values bit-exact
-    // (oracle hash gate + PqSpec determinism pin it)
-    val codes = graft.vector.Pq.encodeV(
-      e.select(col("vec_id").as("id"), col("v")), cb, M, dsub)
-    // per-query ADC table, flattened to a 128-slot array in (m, code)
-    // order so scoring is a pure lookup-sum over the broadcast row
-    val dt = graft.vector.Pq.adcTable(
-      e.filter(col("vec_id") < 3).select(col("vec_id").as("id"), col("v")),
-      cb, K, dsub)
-    val wq = Window.partitionBy("query_id").orderBy(asc("adc"), asc("vec_id"))
-    val shortlist = codes.withColumnRenamed("id", "vec_id")
-      .crossJoin(broadcast(dt))
-      .withColumn("adc",
-        expr(s"aggregate(sequence(0, ${M - 1}), 0D, (acc, m) -> acc + dts[m * $K + codes[m]])"))
-      .withColumn("srank", row_number().over(wq))
-      .filter(col("srank") <= 100)
-      .select(col("query_id"), col("vec_id"), col("adc"))
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    shortlist
-      .join(broadcast(qvecs), Seq("query_id"))
-      .join(e, Seq("vec_id"))
-      .withColumn("cosine", VectorFns.dot(col("qv"), col("v"))) // unit vectors
-      .withColumn("rank", row_number().over(wr).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"),
-        round(col("adc"), 6).as("adc_dist"), round(col("cosine"), 6).as("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    val e = unitEmbeddings(spark, dir).planCache()
+    pqSearch(e, Pq.build(e, seeds = None))
   }
+
+  /** The PQ rungs' corpus: unit-normalized vectors (vec_id, v). */
+  private def unitEmbeddings(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), VectorFns.l2Normalize(VectorFns.asDouble(col("embedding"))).as("v"))
+
+  /** The ANN question batch (unit vectors, no norms) against a PQ index
+    * over `e`, top-5. */
+  private def pqSearch(e: DataFrame, index: Pq.Index): DataFrame =
+    Pq.search(index, e.filter(col("vec_id") < 3).select(col("vec_id").as("query_id"), col("v").as("qv")),
+      e, k = 5)
 
   // ---- ANN: IVF cells of PQ codes (the 100 TB index layout) ----------------
   /** q35's coarse quantizer composed with q38's fine quantizer — the
@@ -2404,83 +2331,8 @@ object PipelineQueries {
     * back. Rows-only like q38 (float k-means); IvfPqSpec pins rank-1
     * self-hit, determinism, and the recall floor vs exact. */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val M = 8; val K = 16; val dsub = 8; val nprobe = 4
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        VectorFns.l2Normalize(VectorFns.asDouble(col("embedding"))).as("v"))
-      .planCache()
-    // coarse codebook: bounded-stride seeds, same as q35 — unit vectors so
-    // cosine is a bare dot against the centroid table. The seed table is
-    // BOUNDED (≤256 rows by construction), so it is collected once and —
-    // r20 — cell assignment is a narrow per-row argmax against the
-    // literal table (PqNearestCellExpr): the crossJoin row blowup and the
-    // max_by exchange over the whole corpus are gone. Probes still join
-    // the (tiny) centroid relation distributed — 3 query rows.
-    val cents = centroidSeeds(e)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val centroids = {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(cents.map { case (id, v) =>
-          org.apache.spark.sql.Row(id, v) }, 1),
-        StructType(Seq(StructField("cent_id", LongType),
-          StructField("cv", ArrayType(DoubleType)))))
-    }
-    val assigned = e.select(col("vec_id"),
-      graft.functions.PqNearestCellExpr.nearestCell(col("v"), cents).as("cell"))
-    // fine codebook: q38's subspace split / train / encode, verbatim
-    val sub = e.select(col("vec_id").as("id"),
-      posexplode(expr(s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $dsub + 1, $dsub))"))
-        .as(Seq("m", "sv")))
-      .planCache()
-    val init = sub.filter(col("id") < K)
-      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
-    val cb = graft.vector.Pq.trainCodebook(sub, init, iters = 3)
-    // the inverted lists: (cell, vec_id, codes) — at scale, parquet
-    // partitioned by cell so a probe reads nprobe directories. r20: codes
-    // come straight off the cached vectors (narrow encodeV), so this join
-    // is the only exchange the list build pays.
-    val invLists = graft.vector.Pq.encodeV(
-        e.select(col("vec_id").as("id"), col("v")), cb, M, dsub)
-      .withColumnRenamed("id", "vec_id")
-      .join(assigned, Seq("vec_id"))
-    // probe set: each query's nprobe nearest coarse cells (tiny — 3×4
-    // rows — so it broadcasts and the cell join prunes the code scan)
-    val wp = Window.partitionBy("query_id").orderBy(desc("cdot"), asc("cent_id"))
-    val probes = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cdot", VectorFns.dot(col("qv"), col("cv")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= nprobe)
-      .select(col("query_id"), col("cent_id").as("cell"))
-    val dt = graft.vector.Pq.adcTable(
-      e.filter(col("vec_id") < 3).select(col("vec_id").as("id"), col("v")),
-      cb, K, dsub)
-    val wq = Window.partitionBy("query_id").orderBy(asc("adc"), asc("vec_id"))
-    val shortlist = invLists
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(dt), Seq("query_id"))
-      .withColumn("adc",
-        expr(s"aggregate(sequence(0, ${M - 1}), 0D, (acc, m) -> acc + dts[m * $K + codes[m]])"))
-      .withColumn("srank", row_number().over(wq))
-      .filter(col("srank") <= 100)
-      .select(col("query_id"), col("vec_id"), col("cell"), col("adc"))
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    shortlist
-      .join(broadcast(qvecs), Seq("query_id"))
-      .join(e, Seq("vec_id"))
-      .withColumn("cosine", VectorFns.dot(col("qv"), col("v"))) // unit vectors
-      .withColumn("rank", row_number().over(wr).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(col("adc"), 6).as("adc_dist"), round(col("cosine"), 6).as("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    val e = unitEmbeddings(spark, dir).planCache()
+    pqSearch(e, Pq.build(e, seeds = Some(centroidSeeds(e))))
   }
 
   // ---- ANN: the PQ family from a PERSISTED index (build once, serve many) --
@@ -2491,163 +2343,41 @@ object PipelineQueries {
     * codebook, encodes every vector to its 8-byte code, assigns coarse
     * cells (q39's unit-vector arithmetic, verbatim), and persists three
     * artifacts a 100 TB deployment would ship: `codebook` (128 tiny
-    * rows, broadcast at serve time), `centroids` (≤256 rows), and
+    * rows, read back to the driver at serve time), `centroids` (≤256
+    * rows, broadcast to the probe), and
     * `invlists` — (vec_id, codes) PARTITIONED BY cell, so a probe
     * reads nprobe directories and the ADC scan's I/O is 8 B/vector.
     * Content-addressed staging (the stagedBlobs discipline): a
     * regenerated source rebuilds, a re-run serves from the artifact. */
   private def pqIndexRoot(spark: SparkSession, dir: String): java.io.File =
     SourceQueries.stagedBlobs(dir, "pqidx", srcTable = "embeddings") { staging =>
-      val M = 8; val K = 16; val dsub = 8
-      // everything here is fully materialized INSIDE the closure (three
-      // parquet writes), so these caches are properly SCOPED: unpersisted
-      // before return, nothing outlives the staging (Caching discipline)
-      val e = Tables.embeddings(spark, dir)
-        .select(col("vec_id"),
-          VectorFns.l2Normalize(VectorFns.asDouble(col("embedding"))).as("v"))
-        .cache()
-      val sub = e.select(col("vec_id").as("id"),
-        posexplode(expr(s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $dsub + 1, $dsub))"))
-          .as(Seq("m", "sv")))
-        .cache()
-      try {
-        val init = sub.filter(col("id") < K)
-          .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
-        val cbSeq = graft.vector.Pq.trainCodebook(sub, init, iters = 3)
-        graft.vector.Pq.codebookDf(spark, cbSeq)
-          .coalesce(1).write.parquet(new java.io.File(staging, "codebook").getAbsolutePath)
-        // bounded seed table (≤256 rows): collect once, persist from the
-        // local relation, assign cells via the narrow literal argmax (r20
-        // — same rewrite as the in-query q39 path; values bit-identical)
-        val cents = centroidSeeds(e)
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        val centroids = {
-          import org.apache.spark.sql.types._
-          spark.createDataFrame(
-            spark.sparkContext.parallelize(cents.map { case (id, v) =>
-              org.apache.spark.sql.Row(id, v) }, 1),
-            StructType(Seq(StructField("cent_id", LongType),
-              StructField("cv", ArrayType(DoubleType)))))
-        }
-        centroids.coalesce(1).write.parquet(new java.io.File(staging, "centroids").getAbsolutePath)
-        val assigned = e.select(col("vec_id"),
-          graft.functions.PqNearestCellExpr.nearestCell(col("v"), cents).as("cell"))
-        graft.vector.Pq.encodeV(
-            e.select(col("vec_id").as("id"), col("v")), cbSeq, M, dsub)
-          .withColumnRenamed("id", "vec_id")
-          .join(assigned, Seq("vec_id"))
-          .write.partitionBy("cell")
-          .parquet(new java.io.File(staging, "invlists").getAbsolutePath)
-      } finally {
-        sub.unpersist(blocking = false)
-        e.unpersist(blocking = false): Unit
-      }
+      // fully materialized INSIDE the closure (three parquet writes), so
+      // the cache is SCOPED: unpersisted before return (Caching discipline)
+      val e = unitEmbeddings(spark, dir).cache()
+      try Pq.save(Pq.build(e, seeds = Some(centroidSeeds(e))), staging.getAbsolutePath)
+      finally e.unpersist(blocking = false): Unit
     }
 
-  /** q38's serving path from the persisted index: read the codebook
-    * (128 rows → broadcast ADC tables) and the codes lake, lookup-sum
-    * score the whole corpus, exact-re-rank the top-100. NO training in
-    * this plan — the per-batch cost is the ADC scan, which is the
-    * build-once/serve-many split q35c and q111 already measure. Output
-    * is bit-identical to q38 (PqIndexSpec pins it): the persisted
-    * doubles round-trip parquet exactly and the arithmetic is verbatim. */
+  /** q38's serving path from the persisted index: the codebook (128 rows)
+    * read back to the driver, the codes lake scanned whole, the top-100
+    * exact-re-ranked. NO training in this plan — the per-batch cost is
+    * the ADC scan, which is the build-once/serve-many split q35c and q111
+    * already measure. Output is bit-identical to q38 (PqIndexSpec pins
+    * it): the persisted doubles round-trip parquet exactly and the search
+    * is the same [[Pq.search]]. */
   def annPqFromIndex(spark: SparkSession, dir: String): DataFrame = {
-    val M = 8; val K = 16; val dsub = 8
-    val idx = pqIndexRoot(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        VectorFns.l2Normalize(VectorFns.asDouble(col("embedding"))).as("v"))
-      .planCache()
-    val cb = spark.read.parquet(s"$idx/codebook")
-    val codes = spark.read.parquet(s"$idx/invlists").select(col("vec_id"), col("codes"))
-    val qsub = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"),
-        posexplode(expr(s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $dsub + 1, $dsub))"))
-          .as(Seq("m", "sv")))
-    val dt = qsub.join(broadcast(cb), Seq("m"))
-      .withColumn("pd",
-        expr("aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0D, (acc, x) -> acc + x)"))
-      .groupBy(col("query_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(m, code, pd))), s -> s.pd)").as("dts"))
-    val wq = Window.partitionBy("query_id").orderBy(asc("adc"), asc("vec_id"))
-    val shortlist = codes
-      .crossJoin(broadcast(dt))
-      .withColumn("adc",
-        expr(s"aggregate(sequence(0, ${M - 1}), 0D, (acc, m) -> acc + dts[m * $K + codes[m]])"))
-      .withColumn("srank", row_number().over(wq))
-      .filter(col("srank") <= 100)
-      .select(col("query_id"), col("vec_id"), col("adc"))
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    shortlist
-      .join(broadcast(qvecs), Seq("query_id"))
-      .join(e, Seq("vec_id"))
-      .withColumn("cosine", VectorFns.dot(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(wr).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"),
-        round(col("adc"), 6).as("adc_dist"), round(col("cosine"), 6).as("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    val index = Pq.load(spark, pqIndexRoot(spark, dir).getAbsolutePath, probed = false)
+    pqSearch(unitEmbeddings(spark, dir).planCache(), index)
   }
 
   /** q39's serving path from the persisted index: centroids broadcast →
-    * probe set → the cell-partitioned invlists join prunes the scan to
-    * nprobe directories (the q35c partition-pruning shape) → ADC over
-    * probed cells only → exact re-rank. Bit-identical to q39
+    * probe set → the cell-partitioned invlists join prunes
+    * the scan to nprobe directories (the q35c partition-pruning shape) →
+    * ADC over probed cells only → exact re-rank. Bit-identical to q39
     * (PqIndexSpec); the per-batch cost is ~nprobe/|cells| of q38b's. */
   def annIvfPqFromIndex(spark: SparkSession, dir: String): DataFrame = {
-    val M = 8; val K = 16; val dsub = 8; val nprobe = 4
-    val idx = pqIndexRoot(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        VectorFns.l2Normalize(VectorFns.asDouble(col("embedding"))).as("v"))
-      .planCache()
-    val cb = spark.read.parquet(s"$idx/codebook")
-    val invLists = spark.read.parquet(s"$idx/invlists")
-    val centroids = spark.read.parquet(s"$idx/centroids")
-    val wp = Window.partitionBy("query_id").orderBy(desc("cdot"), asc("cent_id"))
-    val probes = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cdot", VectorFns.dot(col("qv"), col("cv")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= nprobe)
-      .select(col("query_id"), col("cent_id").as("cell"))
-    val qsub = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"),
-        posexplode(expr(s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $dsub + 1, $dsub))"))
-          .as(Seq("m", "sv")))
-    val dt = qsub.join(broadcast(cb), Seq("m"))
-      .withColumn("pd",
-        expr("aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0D, (acc, x) -> acc + x)"))
-      .groupBy(col("query_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(m, code, pd))), s -> s.pd)").as("dts"))
-    val wq = Window.partitionBy("query_id").orderBy(asc("adc"), asc("vec_id"))
-    val shortlist = invLists
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(dt), Seq("query_id"))
-      .withColumn("adc",
-        expr(s"aggregate(sequence(0, ${M - 1}), 0D, (acc, m) -> acc + dts[m * $K + codes[m]])"))
-      .withColumn("srank", row_number().over(wq))
-      .filter(col("srank") <= 100)
-      .select(col("query_id"), col("vec_id"), col("cell"), col("adc"))
-    val qvecs = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wr = Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))
-    shortlist
-      .join(broadcast(qvecs), Seq("query_id"))
-      .join(e, Seq("vec_id"))
-      .withColumn("cosine", VectorFns.dot(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(wr).cast("int"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(col("adc"), 6).as("adc_dist"), round(col("cosine"), 6).as("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    val index = Pq.load(spark, pqIndexRoot(spark, dir).getAbsolutePath, probed = true)
+    pqSearch(unitEmbeddings(spark, dir).planCache(), index)
   }
 
   /** q38b registered form: same recall contract as q38. */
@@ -2763,15 +2493,11 @@ object PipelineQueries {
     * floor is additionally pinned by MllibCrossCheckSpec. */
   def annMllibCrossCheck(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.linalg.Vectors
-    val toUnitVec = udf((xs: Seq[Double]) => {
-      val n = math.sqrt(xs.map(x => x * x).sum)
-      Vectors.dense((if (n == 0) xs else xs.map(_ / n)).toArray)
-    })
+    import org.apache.spark.ml.functions.array_to_vector
+    // l2Normalize leaves an all-zero vector unchanged (divides by 1.0)
     val feat = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v"))
-      .withColumn("features", toUnitVec(col("v")))
-      .select(col("vec_id"), col("features"))
+      .select(col("vec_id"), array_to_vector(
+        VectorFns.l2Normalize(VectorFns.asDouble(col("embedding")))).as("features"))
       .planCache()
     val lsh = new BucketedRandomProjectionLSH()
       .setBucketLength(2.0).setNumHashTables(3).setSeed(42L)

@@ -146,8 +146,7 @@ object VectorQueries {
       .withColumn("cosine", VectorFns.safeCosine(
         VectorFns.dot(col("qvec"), col("cvec")), col("qnorm"), col("cnorm")))
       .withColumn("is_pos", col("label") === col("anchor_label"))
-    val w = Window.partitionBy(col("anchor_id"), col("is_pos"))
-      .orderBy(desc("cosine"), asc("vec_id"))
+    val w = Window.partitionBy(col("anchor_id"), col("is_pos")).orderBy(TopK.byCosine: _*)
     val ranked = scored.withColumn("rnk", row_number().over(w))
     val negs = ranked.filter(!col("is_pos") && col("rnk") <= 5)
       .select(col("anchor_id"), col("vec_id").as("neg_id"), col("label").as("neg_label"),

@@ -23,16 +23,15 @@ class PqSpec extends SparkSuite {
     // init: first two points (one per cluster) seed the two codes
     val init = sub.filter(col("id") < 2)
       .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
-    val cb = Pq.train(sub, init, iters = 5)
-    val cents = cb.collect().map(r =>
-      ((r.getInt(r.fieldIndex("m")), r.getInt(r.fieldIndex("code"))),
-        r.getSeq[Double](r.fieldIndex("cv")))).toMap
+    val cb = Pq.trainCodebook(sub, init, iters = 5)
+    val cents = cb.map { case (m, code, cv) => ((m, code), cv) }.toMap
     assert(cents.size === 4) // 2 subspaces × 2 codes
     // subspace 0: code 0 near (0+,0−), code 1 near (10+,10−)
     assert(math.abs(cents((0, 0)).head - 0.095) < 0.5)
     assert(math.abs(cents((0, 1)).head - 10.095) < 0.5)
-    val codes = Pq.encode(sub, cb).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val vecs = pts.toDF("id", "s0", "s1").select(col("id"), concat(col("s0"), col("s1")).as("v"))
+    val codes = Pq.encodeV(vecs, cb, m = 2, dsub = 2).collect()
+      .map(r => r.getLong(r.fieldIndex("id")) -> r.getSeq[Int](r.fieldIndex("codes"))).toMap
     // code indices follow the SEED points: point 0 (cluster 0) seeds
     // code 0 in both subspaces, point 1 seeds code 1 — so a cluster-c
     // point encodes as (c, c)
@@ -50,8 +49,8 @@ class PqSpec extends SparkSuite {
     // survive training unchanged
     val init = Seq((0, 0, Seq(0.9, 0.9)), (0, 1, Seq(500.0, 500.0)))
       .toDF("m", "code", "cv")
-    val cb = Pq.train(sub, init, iters = 3).collect()
-      .map(r => r.getInt(1) -> r.getSeq[Double](2)).toMap
+    val cb = Pq.trainCodebook(sub, init, iters = 3)
+      .map { case (_, code, cv) => code -> cv }.toMap
     assert(cb(0) === Seq(1.0, 1.0)) // converged onto the data
     assert(cb(1) === Seq(500.0, 500.0)) // untouched
   }
