@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver's test tables (TESTDATA.md / FIXTURES.md).
   *
@@ -39,6 +40,17 @@ object Tables {
     memo.keySet.removeIf(k =>
       (k._1 eq spark) && k._2.startsWith(path + "@") && k._2 != key)
     memo.computeIfAbsent((spark, key), { _ => spark.read.parquet(path) })
+  }
+
+  /** A `cell`-partitioned index lake (IVF cells, PQ invlists) with `cell`
+    * typed BIGINT, like the long cent_id it was written from: partition
+    * inference alone types small cell ids INT. Given in the read schema,
+    * `cell` stays a bare partition attribute, so a probe join on it still
+    * plants dynamic partition pruning. */
+  def cellLake(spark: SparkSession, path: String): DataFrame = {
+    val inferred = spark.read.parquet(path).schema
+    spark.read.schema(StructType(inferred.map(f =>
+      if (f.name == "cell") f.copy(dataType = LongType) else f))).parquet(path)
   }
 
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")

@@ -1096,7 +1096,7 @@ object PipelineQueries {
   }
 
   def annIvfFromIndex(spark: SparkSession, dir: String): DataFrame =
-    ivfProbe(spark.read.parquet(s"${ivfIndexRoot(spark, dir)}/cells"))
+    ivfProbe(Tables.cellLake(spark, s"${ivfIndexRoot(spark, dir)}/cells"))
 
   // ---- q129: incremental IVF index maintenance (append + drift) ------------
   /** The ANN lakes' day-N+1 shape (VERDICT r16 task 8) — the dedup family
@@ -1383,7 +1383,7 @@ object PipelineQueries {
     * top-5. A compaction that dropped, duplicated, or mis-celled a row
     * changes this ranking and breaks the bit-exact gate. */
   def annCompactedServe(spark: SparkSession, dir: String): DataFrame =
-    ivfProbe(spark.read.parquet(s"${compactedIvfRoot(spark, dir)}/cells"))
+    ivfProbe(Tables.cellLake(spark, s"${compactedIvfRoot(spark, dir)}/cells"))
 
   val annCompactedServeOracle: String =
     """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

@@ -202,7 +202,7 @@ object Pq {
     * centroids read lazily. Without `probed` the search scans every list
     * (no cell column). */
   def load(spark: SparkSession, root: String, probed: Boolean): Index = {
-    val lists = spark.read.parquet(s"$root/invlists")
+    val lists = graft.core.Tables.cellLake(spark, s"$root/invlists")
     val cb = collectCodebook(spark.read.parquet(s"$root/codebook"))
     if (!probed) Index(cb, None, lists.select(col("vec_id"), col("codes")))
     else Index(cb, Some(spark.read.parquet(s"$root/centroids")), lists)

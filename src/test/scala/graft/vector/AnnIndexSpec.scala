@@ -17,9 +17,11 @@ class AnnIndexSpec extends SparkSuite {
   }
 
   test("index-path results equal the in-query path (q35) bit-for-bit") {
-    val fromIndex = PipelineQueries.annIvfFromIndex(spark, sfDir).collect().toSeq
-    val inQuery = PipelineQueries.annIvf(spark, sfDir).collect().toSeq
-    assert(fromIndex === inQuery)
+    val fromIndex = PipelineQueries.annIvfFromIndex(spark, sfDir)
+    val inQuery = PipelineQueries.annIvf(spark, sfDir)
+    // Row equality compares a boxed Int and Long by value: check types too
+    assert(fromIndex.schema === inQuery.schema)
+    assert(fromIndex.collect().toSeq === inQuery.collect().toSeq)
   }
 
   // ---- q129: incremental append contract ----------------------------------

@@ -10,15 +10,19 @@ import graft.queries.PipelineQueries
 class PqIndexSpec extends SparkSuite {
 
   test("PQ index path equals the in-query path (q38) bit-for-bit") {
-    val fromIndex = PipelineQueries.annPqFromIndex(spark, sfDir).collect().toSeq
-    val inQuery = PipelineQueries.annPq(spark, sfDir).collect().toSeq
-    assert(fromIndex === inQuery)
+    val fromIndex = PipelineQueries.annPqFromIndex(spark, sfDir)
+    val inQuery = PipelineQueries.annPq(spark, sfDir)
+    // Row equality compares a boxed Int and Long by value: check types too
+    assert(fromIndex.schema === inQuery.schema)
+    assert(fromIndex.collect().toSeq === inQuery.collect().toSeq)
   }
 
   test("IVFADC index path equals the in-query path (q39) bit-for-bit") {
-    val fromIndex = PipelineQueries.annIvfPqFromIndex(spark, sfDir).collect().toSeq
-    val inQuery = PipelineQueries.annIvfPq(spark, sfDir).collect().toSeq
-    assert(fromIndex === inQuery)
+    val fromIndex = PipelineQueries.annIvfPqFromIndex(spark, sfDir)
+    val inQuery = PipelineQueries.annIvfPq(spark, sfDir)
+    // Row equality compares a boxed Int and Long by value: check types too
+    assert(fromIndex.schema === inQuery.schema)
+    assert(fromIndex.collect().toSeq === inQuery.collect().toSeq)
   }
 
   test("IVFADC serve plan prunes the invlists scan by probed cell") {
