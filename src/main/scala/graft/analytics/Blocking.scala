@@ -1,7 +1,18 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
+
+import org.apache.spark.FutureAction
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
 import graft.core.Caching._
 
 /** Bounded candidate generation for blocking-based near-dup detection.
@@ -75,21 +86,197 @@ object Blocking {
     * Output: two struct columns `_1`/`_2` holding the full input row
     * (block key included, original type) for the lower-`idCol` and
     * higher-`idCol` member of each pair. Deterministic: sub-block assignment is a pure
-    * function of `idCol`, independent of partitioning. */
+    * function of `idCol`, independent of partitioning. Rows with a null
+    * block key pair with nothing, and rows with equal ids never pair.
+    *
+    * Small inputs pair on the driver. A re-upload's dedup input is a few
+    * thousand (doc, band key) rows with a handful of pairs, and there the
+    * count join, the cache build and the task join are all fixed per-job
+    * cost. So when the block key is STRING or integral and the id is
+    * integral, the call first reads back at most [[LocalRows]] + 1 input
+    * rows with ONE job that keeps the input's parallelism (each task
+    * takes at most that many rows and stops once its bytes pass
+    * [[LocalBytes]]; the result handler keeps a running row and byte
+    * total over the finished tasks and cancels the job once either passes
+    * its bound). When the whole input came back:
+    *  - if no id is null and the pair output, counted from the per-block
+    *    row counts and byte sums before any pair is built, is at most
+    *    [[LocalPairs]] pairs and [[LocalBytes]] bytes, the driver makes
+    *    every within-block pair and returns a local relation with the
+    *    distributed result's schema;
+    *  - otherwise the task join above runs over the collected rows, with
+    *    the block counts taken on the driver, so the caller's pipeline is
+    *    not computed again.
+    * Like the small path of [[Clusters]], both are EAGER: the read runs at
+    * call time, not when the returned frame runs. An input over a bound
+    * (or of other key or id types) takes the task join over `df` itself,
+    * lazily, as before.
+    *
+    * The bounds are sized from driver memory, not configured. Pair and
+    * input bytes are counted as Spark's unsafe row bytes:
+    *  - [[LocalBytes]] = 16 MB caps both the collected input and the
+    *    built pairs (each pair holds copies of both rows, as the local
+    *    relation stores it). The driver holds the input, the pair rows
+    *    and the relation's unsafe copy at once, about 3 × 16 MB.
+    *  - [[LocalPairs]] = 1 << 17 pairs caps the per-pair object overhead
+    *    (about 100 bytes each, 13 MB) when the rows themselves are tiny.
+    *  - [[LocalRows]] = 1 << 16 input rows bounds the read whatever the
+    *    row size, and the per-block grouping on the driver.
+    * A re-upload (3,472 rows, 3 pairs) and q34 at sf0.01 (12,344 pairs of
+    * 64-d double rows, about 14 MB) pair on the driver; q34 at sf0.1
+    * (199,666 pairs, about 230 MB) runs the task join over its 2,000
+    * collected rows. */
   def selfPairs(df: DataFrame, blockCol: String, idCol: String,
-                maxBlock: Int): DataFrame = {
+                maxBlock: Int): DataFrame =
+    selfPairs(df, blockCol, idCol, maxBlock, LocalRows, LocalPairs, LocalBytes)
+
+  /** Driver-path bounds (sizing in [[selfPairs]]'s doc). */
+  private val LocalRows = 1 << 16
+  private val LocalPairs = 1L << 17
+  private val LocalBytes = 16L << 20
+
+  /** [[selfPairs]] with the driver-path bounds as parameters,
+    * `0 ≤ localRows < Int.MaxValue`: `localRows` = 0 always runs the task
+    * join over `df` (with no read); `Int.MaxValue - 1` rows and
+    * `Long.MaxValue` pairs and bytes pair every input with a STRING or
+    * integral key and a non-null integral id on the driver; `localPairs`
+    * = -1 runs the task join over the collected rows. */
+  private[analytics] def selfPairs(df: DataFrame, blockCol: String, idCol: String,
+                                   maxBlock: Int, localRows: Int, localPairs: Long,
+                                   localBytes: Long): DataFrame = {
     require(maxBlock > 0, "maxBlock must be positive")
-    val payload = df.columns // block key included: callers project it typed
-    val counts = df.groupBy(col(blockCol)).agg(count(lit(1)).as("_block_n"))
-    val based = df.join(counts, Seq(blockCol))
+    val schema = df.schema
+    val (b, i) = (schema.fieldIndex(blockCol), schema.fieldIndex(idCol))
+    val (keyT, id) = (schema(b).dataType, longId(schema(i).dataType))
+    val collected =
+      if (localRows > 0 && !df.isStreaming && keyType(keyT) && id.isDefined)
+        boundedRows(df, localRows, localBytes)
+      else None
+    collected match {
+      case None =>
+        val payload = df.columns // block key included: callers project it typed
+        val counts = df.groupBy(col(blockCol)).agg(count(lit(1)).as("_block_n"))
+        val counted = df.join(counts, Seq(blockCol)).select(col(blockCol).cast("string").as("_blk"),
+          col("_block_n"), struct(payload.map(col): _*).as("_row"))
+        // both replication sides read this relation; without the cache the
+        // caller's (often expensive) feature columns compute twice
+        // (session-lifetime contract: see graft.core.Caching)
+        taskJoin(counted.planCache(), idCol, maxBlock)
+      case Some(rows) =>
+        // UTF8String and boxed integers compare by value, as their STRING casts do
+        val blocks = rows.filterNot(_.isNullAt(b)).groupBy(_.get(b, keyT)).values.toSeq
+        if (!rows.exists(_.isNullAt(i)) && pairsFit(blocks, localPairs, localBytes))
+          localFrame(df.sparkSession, Seq("_1" -> schema, "_2" -> schema), localPairsOf(blocks, id.get, i))
+        else {
+          val counted = localFrame(df.sparkSession, Seq("_block_n" -> LongType, "_row" -> schema),
+              blocks.flatMap(blk => blk.map(r => InternalRow(blk.length.toLong, r))))
+            .select(col("_row")(blockCol).cast("string").as("_blk"), col("_block_n"), col("_row"))
+          taskJoin(counted, idCol, maxBlock)
+        }
+    }
+  }
+
+  /** Block key types whose grouping by value equals the task join's
+    * grouping on the key cast to STRING. */
+  private def keyType(t: DataType): Boolean = t match {
+    case _: StringType | ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The reader of an integral id column as a Long, for the driver path. */
+  private def longId(t: DataType): Option[(InternalRow, Int) => Long] = t match {
+    case LongType => Some((r, i) => r.getLong(i))
+    case IntegerType => Some((r, i) => r.getInt(i).toLong)
+    case ShortType => Some((r, i) => r.getShort(i).toLong)
+    case ByteType => Some((r, i) => r.getByte(i).toLong)
+    case _ => None
+  }
+
+  /** All of `df` as unsafe row copies, or None when it has more than
+    * `maxRows` rows or more than `maxBytes` bytes. One job with one task
+    * per input partition; each task stops after `maxRows + 1` rows or
+    * once its bytes pass `maxBytes`, and the job is cancelled as soon as
+    * the running totals over the finished tasks pass either bound. */
+  private def boundedRows(df: DataFrame, maxRows: Int, maxBytes: Long): Option[Array[UnsafeRow]] = {
+    val rdd = Bridge.internalRows(df)
+    val take = boundedTake(df.schema, maxRows, maxBytes)
+    val parts = new Array[Array[UnsafeRow]](rdd.getNumPartitions)
+    var (rows, bytes) = (0L, 0L)
+    @volatile var over = false
+    @volatile var job: FutureAction[Unit] = null
+    def cancel(): Unit = Option(job).foreach(_.cancel(Some("selfPairs: input over the driver-path bound")))
+    // the handler runs on the scheduler's event thread, one task result at a time
+    job = rdd.sparkContext.submitJob[InternalRow, Array[UnsafeRow], Unit](rdd, take,
+      parts.indices, (p, part) => if (!over) {
+        parts(p) = part
+        rows += part.length
+        bytes += part.iterator.map(_.getSizeInBytes.toLong).sum
+        if (rows > maxRows || bytes > maxBytes) { over = true; cancel() }
+      }, ())
+    if (over) cancel() // passed a bound before `job` was assigned
+    Await.ready(job, Duration.Inf)
+    job.value.get match {
+      case _ if over => None
+      case Failure(e) => throw e
+      case Success(_) => Some(parts.flatten)
+    }
+  }
+
+  /** The task side of [[boundedRows]]: kept out of its closure so the
+    * task captures only the schema and the bounds. */
+  private def boundedTake(schema: StructType, maxRows: Int, maxBytes: Long)
+      : Iterator[InternalRow] => Array[UnsafeRow] = it => {
+    val proj = UnsafeProjection.create(schema)
+    val out = Array.newBuilder[UnsafeRow]
+    var (n, bytes) = (0, 0L)
+    while (it.hasNext && n <= maxRows && bytes <= maxBytes) {
+      val r = proj(it.next()).copy()
+      out += r
+      n += 1
+      bytes += r.getSizeInBytes
+    }
+    out.result()
+  }
+
+  /** Whether the within-block pairs of `blocks` stay within both bounds,
+    * counted from the block sizes and byte sums alone. A pair row is its
+    * null bits and two offset words, then copies of both rows. */
+  private def pairsFit(blocks: Seq[Array[UnsafeRow]], maxPairs: Long, maxBytes: Long): Boolean = {
+    var (pairs, bytes) = (0L, 0L)
+    for (blk <- blocks) {
+      val (n, sum) = (blk.length.toLong, blk.iterator.map(_.getSizeInBytes.toLong).sum)
+      pairs += n * (n - 1) / 2
+      bytes += n * (n - 1) / 2 * 24 + sum * (n - 1)
+    }
+    pairs <= maxPairs && bytes <= maxBytes
+  }
+
+  /** Every unordered within-block pair as (lower-id row, higher-id row);
+    * rows with equal ids never pair. */
+  private def localPairsOf(blocks: Seq[Array[UnsafeRow]], id: (InternalRow, Int) => Long,
+                           i: Int): Seq[InternalRow] = {
+    val pairs = Array.newBuilder[InternalRow]
+    for (blk <- blocks; x <- blk.indices; y <- x + 1 until blk.length) {
+      val (l, r) = (blk(x), blk(y))
+      val (il, ir) = (id(l, i), id(r, i))
+      if (il < ir) pairs += InternalRow(l, r)
+      else if (ir < il) pairs += InternalRow(r, l)
+    }
+    pairs.result().toSeq
+  }
+
+  /** A local relation of non-null columns over rows built on the driver. */
+  private def localFrame(spark: SparkSession, cols: Seq[(String, DataType)],
+                         rows: Seq[InternalRow]): DataFrame =
+    Bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })), rows))
+
+  /** The skew-balanced task join of [[selfPairs]] over `counted`
+    * (`_blk`, `_block_n`, `_row`): every row with its block's row count. */
+  private def taskJoin(counted: DataFrame, idCol: String, maxBlock: Int): DataFrame = {
+    val based = counted
       .withColumn("_s", ceil(col("_block_n") / lit(maxBlock.toDouble)).cast("int"))
-      .withColumn("_g", pmod(hash(col(idCol)), col("_s")))
-      .select(col(blockCol).cast("string").as("_blk"), col("_s"), col("_g"),
-        struct(payload.map(col): _*).as("_row"))
-      // both replication sides read this subtree; without the cache the
-      // caller's (often expensive) feature columns compute twice
-      // (session-lifetime contract: see graft.core.Caching)
-      .planCache()
+      .withColumn("_g", pmod(hash(col("_row")(idCol)), col("_s")))
     val aSide = based
       .withColumn("_j", explode(sequence(col("_g"), col("_s") - 1)))
       .select(concat(col("_blk"), lit(SaltSep), col("_g"), lit(":"), col("_j")).as("_task"),

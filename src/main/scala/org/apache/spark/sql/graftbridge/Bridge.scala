@@ -36,6 +36,14 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A DataFrame's rows as Spark's internal RDD, planned afresh so the
+    * caller's own QueryExecution is left as it was. An iterator may reuse
+    * its row object between steps: copy a row before keeping it. */
+  def internalRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    ofRows(df.sparkSession, analyzedPlan(df))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
+
   /** Drain the listener bus (private[spark]) — dev profiling tools must
     * wait for async job/stage events before reading listener state. */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
