@@ -5,6 +5,7 @@ import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success}
 
 import org.apache.spark.FutureAction
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
@@ -92,13 +93,15 @@ object Blocking {
     * Small inputs pair on the driver. A re-upload's dedup input is a few
     * thousand (doc, band key) rows with a handful of pairs, and there the
     * count join, the cache build and the task join are all fixed per-job
-    * cost. So when the block key is STRING or integral and the id is
-    * integral, the call first reads back at most [[LocalRows]] + 1 input
-    * rows with ONE job that keeps the input's parallelism (each task
-    * takes at most that many rows and stops once its bytes pass
-    * [[LocalBytes]]; the result handler keeps a running row and byte
-    * total over the finished tasks and cancels the job once either passes
-    * its bound). When the whole input came back:
+    * cost. So when the block key is STRING or integral, the id is
+    * integral and the optimizer's size estimate of the input is at most
+    * [[LocalBytes]], the call first reads back at most [[LocalRows]] + 1
+    * input rows with ONE job that keeps the input's parallelism (each of
+    * its p tasks stops after that many rows or once its bytes pass
+    * [[LocalBytes]] / p, and the job is cancelled as soon as a task hits
+    * its byte cap or the running row total passes [[LocalRows]], so at
+    * most [[LocalBytes]] plus one row per task reaches the driver). When
+    * the whole input came back:
     *  - if no id is null and the pair output, counted from the per-block
     *    row counts and byte sums before any pair is built, is at most
     *    [[LocalPairs]] pairs and [[LocalBytes]] bytes, the driver makes
@@ -108,16 +111,24 @@ object Blocking {
     *    the block counts taken on the driver, so the caller's pipeline is
     *    not computed again.
     * Like the small path of [[Clusters]], both are EAGER: the read runs at
-    * call time, not when the returned frame runs. An input over a bound
-    * (or of other key or id types) takes the task join over `df` itself,
-    * lazily, as before.
+    * call time, not when the returned frame runs, so it runs even where
+    * the caller's plan would later prune the pairs. An input estimated
+    * over [[LocalBytes]] (or of unknown size, or of other key or id types)
+    * starts no read and takes the task join over `df` itself, lazily, as
+    * before; an input the estimate puts under the bound that is larger in
+    * fact pays the cancelled read, which runs its upstream shuffles once
+    * more than the task join alone.
     *
     * The bounds are sized from driver memory, not configured. Pair and
     * input bytes are counted as Spark's unsafe row bytes:
     *  - [[LocalBytes]] = 16 MB caps both the collected input and the
     *    built pairs (each pair holds copies of both rows, as the local
     *    relation stores it). The driver holds the input, the pair rows
-    *    and the relation's unsafe copy at once, about 3 × 16 MB.
+    *    and the relation's unsafe copy at once, about 3 × 16 MB. The
+    *    optimizer's estimate is held to the same 16 MB, but it is not
+    *    the unsafe size: it takes a string as 20 bytes and an array as
+    *    one element, so it read 5× over a re-upload's keys (0.8 MB) and
+    *    a seventh of q31's shingle rows (0.6 MB for 4.8 MB at sf0.1).
     *  - [[LocalPairs]] = 1 << 17 pairs caps the per-pair object overhead
     *    (about 100 bytes each, 13 MB) when the rows themselves are tiny.
     *  - [[LocalRows]] = 1 << 16 input rows bounds the read whatever the
@@ -193,25 +204,38 @@ object Blocking {
   }
 
   /** All of `df` as unsafe row copies, or None when it has more than
-    * `maxRows` rows or more than `maxBytes` bytes. One job with one task
-    * per input partition; each task stops after `maxRows + 1` rows or
-    * once its bytes pass `maxBytes`, and the job is cancelled as soon as
-    * the running totals over the finished tasks pass either bound. */
+    * `maxRows` rows or more than `maxBytes` bytes. An input whose
+    * optimizer size estimate is over `maxBytes`, or unknown (Spark takes
+    * an RDD's size as `Long.MaxValue`), is declined with no job, so it
+    * never runs its upstream stages for the read. */
   private def boundedRows(df: DataFrame, maxRows: Int, maxBytes: Long): Option[Array[UnsafeRow]] = {
-    val rdd = Bridge.internalRows(df)
-    val take = boundedTake(df.schema, maxRows, maxBytes)
+    val qe = Bridge.freshExecution(df)
+    if (qe.optimizedPlan.stats.sizeInBytes > maxBytes) None else readBounded(qe.toRdd, df.schema, maxRows, maxBytes)
+  }
+
+  /** One job with one task per partition of `rdd`: each task stops after
+    * `maxRows + 1` rows or once its bytes pass `maxBytes / partitions`,
+    * and a task that stopped on its byte cap, or a running row total over
+    * `maxRows`, cancels the job. So the driver receives at most `maxBytes`
+    * plus one row per partition, however many tasks finish before the
+    * cancel. */
+  private def readBounded(rdd: RDD[InternalRow], schema: StructType, maxRows: Int,
+                          maxBytes: Long): Option[Array[UnsafeRow]] = {
     val parts = new Array[Array[UnsafeRow]](rdd.getNumPartitions)
-    var (rows, bytes) = (0L, 0L)
+    val taskBytes = maxBytes / math.max(parts.length, 1)
+    var rows = 0L
     @volatile var over = false
     @volatile var job: FutureAction[Unit] = null
     def cancel(): Unit = Option(job).foreach(_.cancel(Some("selfPairs: input over the driver-path bound")))
     // the handler runs on the scheduler's event thread, one task result at a time
-    job = rdd.sparkContext.submitJob[InternalRow, Array[UnsafeRow], Unit](rdd, take,
-      parts.indices, (p, part) => if (!over) {
+    job = rdd.sparkContext.submitJob[InternalRow, Array[UnsafeRow], Unit](rdd,
+      boundedTake(schema, maxRows, taskBytes), parts.indices, (p, part) => if (!over) {
         parts(p) = part
         rows += part.length
-        bytes += part.iterator.map(_.getSizeInBytes.toLong).sum
-        if (rows > maxRows || bytes > maxBytes) { over = true; cancel() }
+        if (rows > maxRows || part.iterator.map(_.getSizeInBytes.toLong).sum > taskBytes) {
+          over = true
+          cancel()
+        }
       }, ())
     if (over) cancel() // passed a bound before `job` was assigned
     Await.ready(job, Duration.Inf)
@@ -222,8 +246,8 @@ object Blocking {
     }
   }
 
-  /** The task side of [[boundedRows]]: kept out of its closure so the
-    * task captures only the schema and the bounds. */
+  /** The task side of [[readBounded]]: kept out of its closure so the
+    * task captures only the schema and the caps. */
   private def boundedTake(schema: StructType, maxRows: Int, maxBytes: Long)
       : Iterator[InternalRow] => Array[UnsafeRow] = it => {
     val proj = UnsafeProjection.create(schema)

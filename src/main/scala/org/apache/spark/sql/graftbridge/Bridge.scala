@@ -36,13 +36,14 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** A DataFrame's rows as Spark's internal RDD, planned afresh so the
-    * caller's own QueryExecution is left as it was. An iterator may reuse
-    * its row object between steps: copy a row before keeping it. */
-  def internalRows(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+  /** A DataFrame's query execution planned afresh, so the caller's own
+    * QueryExecution is left as it was. Its `optimizedPlan.stats` is the
+    * optimizer's size estimate; its `toRdd` iterators may reuse their row
+    * object between steps: copy a row before keeping it. */
+  def freshExecution(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.QueryExecution =
     ofRows(df.sparkSession, analyzedPlan(df))
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
 
   /** Drain the listener bus (private[spark]) — dev profiling tools must
     * wait for async job/stage events before reading listener state. */

@@ -1,8 +1,9 @@
 package graft.analytics
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -16,7 +17,7 @@ import graft.SparkSuite
   * as ∞ rows and -1 pairs (the task join over the collected rows) and as 0
   * (the task join over the input itself) must give the same schema and
   * the same rows; the inputs the driver path must decline take a task
-  * join. */
+  * join, and the inputs the read must decline start no job. */
 class BlockingLocalSpec extends SparkSuite {
 
   private def pairs(df: DataFrame, block: String, id: String, maxBlock: Int,
@@ -43,11 +44,17 @@ class BlockingLocalSpec extends SparkSuite {
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
-  private lazy val inputs: Seq[(String, DataFrame, String, String)] = {
+  /** `BlockingSpec`'s frame: a hot block of 300 (3× the cap at
+    * maxBlock 100), a mid block of 60 and a tail of singletons. */
+  private lazy val hotMidTail: DataFrame = {
     import spark.implicits._
-    val hotMidTail = ((0L until 300L).map(i => (i, "HOT", i * 2)) ++
+    ((0L until 300L).map(i => (i, "HOT", i * 2)) ++
       (1000L until 1060L).map(i => (i, "MID", i * 2)) ++
       (5000L until 5050L).map(i => (i, s"b_$i", i * 2))).toDF("id", "block", "payload")
+  }
+
+  private lazy val inputs: Seq[(String, DataFrame, String, String)] = {
+    import spark.implicits._
     val lake = java.nio.file.Files.createTempDirectory("blocking-pairs").resolve("rows").toString
     Seq[(Long, Option[String], Option[Double], Option[Seq[Long]])](
       (1L, Some("a"), Some(0.5), Some(Seq(1L, 2L))), (2L, Some("a"), None, None),
@@ -83,6 +90,25 @@ class BlockingLocalSpec extends SparkSuite {
     }
   }
 
+  test("task join over the input: exactly the naive pair set, and deterministic under repartitioning") {
+    import spark.implicits._
+    val got = distributed(hotMidTail, "block", "id")
+      .select(col("_1.id"), col("_1.payload"), col("_2.id"), col("_2.payload"))
+      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    val naive = hotMidTail.as("a").join(hotMidTail.as("b"),
+        col("a.block") === col("b.block") && col("a.id") < col("b.id"))
+      .select(col("a.id"), col("a.payload"), col("b.id"), col("b.payload"))
+      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    assert(naive.size === 300 * 299 / 2 + 60 * 59 / 2)
+    assert(got === naive) // no pair lost, none twice, lower id first, payloads on their own side
+    val df = (0L until 500L).map(i => (i, s"blk_${i % 3}")).toDF("id", "block")
+    def ids(in: DataFrame) = distributed(in, "block", "id", maxBlock = 40)
+      .select(col("_1.id"), col("_2.id")).as[(Long, Long)].collect().sorted.toSeq
+    val one = ids(df)
+    assert(one.size === 2 * (167 * 166 / 2) + 166 * 165 / 2)
+    assert(ids(df.repartition(17)) === one)
+  }
+
   test("driver path: equal ids never pair, null block keys pair with nothing, lower id first") {
     import spark.implicits._
     val df = Seq[(Long, Option[String])]((2L, Some("a")), (2L, Some("a")), (1L, Some("a")),
@@ -115,34 +141,73 @@ class BlockingLocalSpec extends SparkSuite {
     assert(path(Blocking.selfPairs(vectors.filter(col("vec_id") < 100L), "label", "vec_id", 1024)) === "driver")
   }
 
-  /** Spark jobs that `body` starts on this thread. */
-  private def jobs(body: => Unit): Int = {
+  /** The Spark jobs that `body` starts on this thread, and the result
+    * bytes their tasks sent to the driver. */
+  private def jobs(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
     val group = s"pairs-jobs-${java.util.UUID.randomUUID}"
     val n = new AtomicInteger
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val sent = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
           n.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) sent.addAndGet(e.taskMetrics.resultSize)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "jobs-per-call guard")
     try { body; Bridge.waitListenerBusEmpty(sc) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    n.get
+    (n.get, sent.get)
   }
 
+  /** 500 rows, 7 blocks, 4 partitions; a range keeps the size estimate
+    * known. */
+  private def fourParts: DataFrame = spark.range(0, 500, 1, 4)
+    .select(col("id"), concat(lit("k"), (col("id") % 7).cast("string")).as("block"), (col("id") * 3).as("payload"))
+
   test("a small input costs exactly one Spark job at call time and returns a local relation") {
-    import spark.implicits._
-    val df = spark.sparkContext.parallelize((0L until 500L).map(i => (i, s"k${i % 7}", i * 3)), 4)
-      .toDF("id", "block", "payload")
     var out: DataFrame = null
-    assert(jobs { out = Blocking.selfPairs(df, "block", "id", 256) } === 1)
+    assert(jobs { out = Blocking.selfPairs(fourParts, "block", "id", 256) }._1 === 1)
     assert(path(out) === "driver")
     // one job over a larger input too: the bounded read is cancelled, the
     // distributed join stays lazy
-    assert(jobs { out = pairs(df, "block", "id", 256, 100, Long.MaxValue) } === 1)
+    assert(jobs { out = pairs(fourParts, "block", "id", 256, 100, Long.MaxValue) }._1 === 1)
     assert(path(out) === "input")
+  }
+
+  test("an input estimated over the byte bound, or of unknown size, starts no read") {
+    import spark.implicits._
+    var out: DataFrame = null
+    // the estimate of 500 range rows is about 11 KB
+    assert(jobs { out = Blocking.selfPairs(fourParts, "block", "id", 256, Int.MaxValue - 1, Long.MaxValue, 1000L) }
+      ._1 === 0)
+    assert(path(out) === "input")
+    // Spark takes an RDD's size as Long.MaxValue
+    val rdd = spark.sparkContext.parallelize((0L until 500L).map(i => (i, s"k${i % 7}")), 4).toDF("id", "block")
+    assert(jobs { out = Blocking.selfPairs(rdd, "block", "id", 256) }._1 === 0)
+    assert(path(out) === "input")
+    assert(rows(out) === rows(local(rdd, "block", "id", 256)))
+  }
+
+  test("partitions that pass the byte bound only together send about the bound to the driver") {
+    val bound = 1L << 20
+    // 8 partitions of 3,900 240-byte rows, about 0.9 MB each and 7.5 MB in
+    // all; the estimate takes a string as 20 bytes and stays under the bound
+    val df = spark.range(0, 31200, 1, 8).select(col("id"),
+      concat(lit("k"), (col("id") % 5).cast("string")).as("block"), repeat(lit("x"), 200).as("payload"))
+    assert(Bridge.freshExecution(df).optimizedPlan.stats.sizeInBytes < bound)
+    var out: DataFrame = null
+    val (n, sent) = jobs { out = Blocking.selfPairs(df, "block", "id", 256, Int.MaxValue - 1, Long.MaxValue, bound) }
+    assert(n === 1)
+    assert(path(out) === "input")
+    // each task stops after its eighth of the bound; a cap of the whole
+    // bound per task would send at least two partitions, 1.8 MB
+    assert(sent < bound + bound / 4, s"$sent result bytes")
   }
 
   test("task join over collected rows: the caller's block key is computed once per input row") {
