@@ -152,13 +152,9 @@ object Sketches {
     out
   }
 
-  /** SimHash band keys: 4 × 16-bit bands; near-identical docs (hamming ≤ a
-    * few bits) collide on at least one band with high probability. */
-  def simhashBands(text: String): Array[Long] = simhashBandsOf(simhash64(text))
-
-  /** Band keys from an ALREADY-COMPUTED fingerprint — consumers that carry
-    * the fingerprint column derive bands from it instead of re-hashing the
-    * text (the fingerprint is the expensive part: O(tokens) murmurs). */
+  /** SimHash band keys (4 × 16-bit bands) from an already-computed
+    * fingerprint: near-identical docs (hamming ≤ a few bits) collide on
+    * at least one band with high probability. */
   def simhashBandsOf(h: Long): Array[Long] =
     Array.tabulate(4)(b => ((b.toLong << 32) | ((h >>> (16 * b)) & 0xffffL)))
 

@@ -8,6 +8,7 @@ import graft.analytics.Sketches
 import graft.core.Caching._
 import graft.core.Tables
 import graft.functions.VectorFns
+import graft.sources.BlobDataSource
 import graft.vector.{Pq, TopK}
 
 /** Training-data-pipeline operators (builder mandate + VERDICT.md): exact
@@ -865,11 +866,11 @@ object PipelineQueries {
     val base = Tables.documents(spark, dir)
       .filter(length(col("text")) >= 64)
       .select(col("doc_id"), col("text").cast("binary").as("content"))
-    val blobRoot = SourceQueries.stagedBlobs(dir, "pngmut") { staging =>
+    val blobRoot = SourceQueries.stagedDocBlobs(dir, "pngmut", "png") {
       // the twin-id convention (id + 1,000,000 — shared with the
-      // corpusMutant family) silently overwrites staged files if real
-      // ids reach the offset: guard LOUDLY before any blob is written.
-      // Inside the populate closure so the extra aggregation runs once
+      // corpusMutant family) collides with real ids that reach the
+      // offset: guard LOUDLY before any blob is written, naming the
+      // cause. Inside the rows block so the extra aggregation runs once
       // per staged lake, not on every (cached) invocation; max is null
       // on an empty corpus — nothing to stage, nothing to collide.
       val maxIdRow = base.agg(max(col("doc_id"))).head()
@@ -877,27 +878,18 @@ object PipelineQueries {
         s"imageNeardup: doc_id ${maxIdRow.get(0)} collides with the +1,000,000 twin id space")
       base
         .as[(Long, Array[Byte])]
-        .foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          it.foreach { case (id, bytes) =>
-            val px = bytes.map(b => b & 0xff)
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%07d.png").toPath,
-              graft.sources.Png.encode(px))
-            // the edited re-encode: contrast x2, brightness +2, dither —
-            // clamped at white like every real brightness edit (ASCII
-            // corpora never reach the clamp; non-ASCII bytes would)
-            val edited =
-              Array.tabulate(px.length)(i => math.min(255, 2 * px(i) + 2 + i % 2))
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_${id + 1000000L}%07d.png").toPath,
-              graft.sources.Png.encode(edited))
-          }
+        .flatMap { case (id, bytes) =>
+          val px = bytes.map(b => b & 0xff)
+          // the edited re-encode: contrast x2, brightness +2, dither —
+          // clamped at white like every real brightness edit (ASCII
+          // corpora never reach the clamp; non-ASCII bytes would)
+          val edited =
+            Array.tabulate(px.length)(i => math.min(255, 2 * px(i) + 2 + i % 2))
+          Seq((id, graft.sources.Png.encode(px)),
+            (id + 1000000L, graft.sources.Png.encode(edited)))
         }
     }
-    val hashed = spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.png", 1).cast("long").as("doc_id"),
-        col("content"))
+    val hashed = BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         (id, Sketches.dhash63(graft.sources.Png.decodeToSamples(bytes)))

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.sources.{Collections, Jpeg, Multimodal, Png}
+import graft.sources.{BlobDataSource, Collections, Jpeg, Multimodal, Png}
 import scala.jdk.CollectionConverters._
 
 /** Source/sink-shaped operators (SURVEY §2.1): ordered page reassembly
@@ -305,9 +305,9 @@ object SourceQueries {
     * real-container round trip): the `blobs_<fmt>` family of
     * `Staging.staged`, keyed by the source table's fingerprint — a
     * regenerated source or a changed blob format misses the cache, a
-    * re-run hits it. `populate` runs the distributed write (a Spark job
-    * with a foreachPartition file sink) into the temp dir Staging
-    * publishes. */
+    * re-run hits it. `populate` runs the distributed write (a Spark job)
+    * into the temp dir Staging publishes; a `doc_<id>.<ext>` lake goes
+    * through [[stagedDocBlobs]]. */
   private[queries] def stagedBlobs(dir: String, fmt: String, srcTable: String = "documents")(
       populate: java.io.File => Unit): java.io.File =
     graft.core.Staging.staged(s"blobs_$fmt", dir, srcTable)(populate)
@@ -318,43 +318,79 @@ object SourceQueries {
       srcTable: String = "documents"): java.io.File =
     graft.core.Staging.path(s"blobs_$fmt", dir, srcTable)
 
+  /** A staged doc-blob lake: each `(doc_id, bytes)` row of `rows` becomes
+    * the file `doc_<id>.<ext>`, written by the `graftblob` sink (one file
+    * per row, published by its job commit) and read back with
+    * [[BlobDataSource.docBlobs]]. `rows` is built only when the lake is
+    * not staged yet. */
+  private[queries] def stagedDocBlobs(dir: String, fmt: String, ext: String)(
+      rows: => Dataset[(Long, Array[Byte])]): java.io.File =
+    stagedBlobs(dir, fmt) { staging =>
+      rows.toDF("doc_id", "content")
+        .select(col("doc_id"), lit(ext).as("ext"),
+          length(col("content")).cast("long").as("length"), col("content"))
+        .write.format("graftblob").mode("append").save(staging.getAbsolutePath)
+    }
+
+  /** Each doc's text bytes as unsigned samples (a null text has none):
+    * the payload of the WAV and PNG lakes. */
+  private def textSamples(spark: SparkSession, dir: String): Dataset[(Long, Array[Int])] = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text").cast("binary").as("content"))
+      .as[(Long, Array[Byte])]
+      .map { case (id, bytes) =>
+        (id, (if (bytes == null) Array.empty[Byte] else bytes).map(b => b & 0xff))
+      }
+  }
+
+  /** Each non-empty doc's text cut into `n`-char slices: the pages,
+    * frames and cues of the paged lakes. */
+  private def textSlices(spark: SparkSession, dir: String, n: Int): Dataset[(Long, Seq[String])] = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .filter(length(col("text")) > 0)
+      .select(col("doc_id"), expr(
+        s"transform(sequence(0, length(text) - 1, $n), s -> substring(text, s + 1, $n))"))
+      .as[(Long, Seq[String])]
+  }
+
+  /** Each doc's q02c paragraphs (10-token windows), over the docs `keep`
+    * admits (`toks` is the doc's token array). */
+  private def textParas(spark: SparkSession, dir: String, keep: Column): Dataset[(Long, Seq[String])] = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
+      .filter(keep)
+      .select(col("doc_id"), expr(
+        "transform(sequence(0, (size(toks) - 1) div 10), i -> concat_ws(' ', slice(toks, i * 10 + 1, 10)))"))
+      .as[(Long, Seq[String])]
+  }
+
   // --- q60b: real binaryFile ingestion (D8, app.py:162-164) -----------------
   /** The upload path closed for real: each doc is materialized as a
     * genuine WAV file (16-bit PCM mono, samples = the text's byte values;
-    * distributed foreachPartition write — the file-sink side of a blob
+    * written by the `graftblob` sink — the file-sink side of a blob
     * exchange), read back with the `binaryFile` source, and decoded by
     * the REAL RIFF/WAVE codec in Multimodal.decodeSamples — header walk,
     * fmt validation, int16 frames. Because the decoded samples equal the
     * text bytes, the DuckDB oracle stays the same ord()-code arithmetic:
     * a codec bug (off-by-one in the chunk walk, endianness, padding)
-    * breaks the bit-exact match loudly. doc_id rides in the file name,
-    * recovered from the source's `path` column. On a cluster the blob dir
-    * would be DFS; local-mode it's a shared local dir. */
+    * breaks the bit-exact match loudly. doc_id rides in the file name.
+    * On a cluster the blob dir would be DFS; local-mode it's a shared
+    * local dir. */
   /** The PCM16 WAV lake (one file per doc, samples = text bytes) —
     * shared by q60b's ingestion check and q60v's trim stage; staged
     * once per corpus fingerprint. */
   private def wavLake(spark: SparkSession, dir: String): java.io.File = {
     import spark.implicits._
-    stagedBlobs(dir, "wav") { staging =>
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("content"))
-        .as[(Long, Array[Byte])]
-        .foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          it.foreach { case (id, bytes) =>
-            val samples = (if (bytes == null) Array.empty[Byte] else bytes).map(b => b & 0xff)
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.wav").toPath,
-              Multimodal.encodeWavPcm16(samples))
-          }
-        }
+    stagedDocBlobs(dir, "wav", "wav") {
+      textSamples(spark, dir).map { case (id, s) => (id, Multimodal.encodeWavPcm16(s)) }
     }
   }
 
   def multimodalBinaryFiles(spark: SparkSession, dir: String): DataFrame = {
-    val blobs = spark.read.format("binaryFile").load(wavLake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.wav", 1).cast("long").as("doc_id"),
-        col("content"))
+    val blobs = BlobDataSource.docBlobs(spark, wavLake(spark, dir).getAbsolutePath)
     Multimodal.extractFeatures(blobs)
       .select(col("doc_id"), col("n_samples"), col("frame_checksum"), col("n_frames"))
       .orderBy(col("doc_id"))
@@ -374,10 +410,7 @@ object SourceQueries {
     * 6-column summary shuffles, never audio samples. */
   def audioSilenceTrim(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(wavLake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.wav", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, wavLake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val s = Multimodal.decodeSamples(bytes)
@@ -442,27 +475,16 @@ object SourceQueries {
     * bug) breaks the bit-exact match loudly. */
   def wavSubformats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobRoot = stagedBlobs(dir, "wav3") { staging =>
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("content"))
-        .as[(Long, Array[Byte])]
-        .foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          it.foreach { case (id, bytes) =>
-            val samples = (if (bytes == null) Array.empty[Byte] else bytes).map(b => b & 0xff)
-            val wav = (id % 3) match {
-              case 0 => Multimodal.encodeWavPcm16(samples)
-              case 1 => Multimodal.encodeWavPcm8(samples)
-              case _ => Multimodal.encodeWavFloat32(samples)
-            }
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.wav").toPath, wav)
-          }
-        }
+    val blobRoot = stagedDocBlobs(dir, "wav3", "wav") {
+      textSamples(spark, dir).map { case (id, s) =>
+        (id, (id % 3) match {
+          case 0 => Multimodal.encodeWavPcm16(s)
+          case 1 => Multimodal.encodeWavPcm8(s)
+          case _ => Multimodal.encodeWavFloat32(s)
+        })
+      }
     }
-    val blobs = spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.wav", 1).cast("long").as("doc_id"),
-        col("content"))
+    val blobs = BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
     Multimodal.extractFeatures(blobs)
       .select(col("doc_id"),
         expr("CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'pcm16' WHEN 1 THEN 'pcm8' " +
@@ -503,31 +525,15 @@ object SourceQueries {
   /** Stage (and cache) the genuine .docx blob dir shared by q60c/q79. */
   private def docxBlobRoot(spark: SparkSession, dir: String): java.io.File = {
     import spark.implicits._
-    stagedBlobs(dir, "docx") { staging =>
-      Tables.documents(spark, dir)
-        .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
-        .filter(size(col("toks")) > 0)
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, (size(toks) - 1) div 10), i -> concat_ws(' ', slice(toks, i * 10 + 1, 10)))")
-          .as("paras"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, paras) =>
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.docx").toPath,
-              graft.sources.Docx.encode(paras))
-          }
-        }
+    stagedDocBlobs(dir, "docx", "docx") {
+      textParas(spark, dir, size(col("toks")) > 0)
+        .map { case (id, paras) => (id, graft.sources.Docx.encode(paras)) }
     }
   }
 
   def docxRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobRoot = docxBlobRoot(spark, dir)
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.docx", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, docxBlobRoot(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val paras = graft.sources.Docx.decodeParagraphs(bytes)
@@ -703,33 +709,17 @@ object SourceQueries {
   /** Shared harness for the staged paged-container round-trip family
     * (the PDF shapes q60m/n/p/q/r and the TIFF q60t): page every doc's
     * text into 200-char pages, stage ONE container file per doc via
-    * `encodeDoc` under a content-addressed blob dir, decode with the
-    * format's full page-decoding ladder, and compare VERBATIM against
-    * the source text — q01's oracle contract, so `pagesConcatOracle`
-    * applies to every member unchanged. */
+    * `encodeDoc`, decode with the format's full page-decoding ladder,
+    * and compare VERBATIM against the source text — q01's oracle
+    * contract, so `pagesConcatOracle` applies to every member unchanged. */
   private def pagedBlobRoundtrip(spark: SparkSession, dir: String, fmt: String,
       ext: String)(encodeDoc: (Long, Seq[String]) => Array[Byte])(
       decodePages: Array[Byte] => Seq[String]): DataFrame = {
     import spark.implicits._
-    val blobRoot = stagedBlobs(dir, fmt) { staging =>
-      Tables.documents(spark, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, length(text) - 1, 200), s -> substring(text, s + 1, 200))")
-          .as("pages"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, pages) =>
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.$ext").toPath,
-              encodeDoc(id, pages))
-          }
-        }
+    val blobRoot = stagedDocBlobs(dir, fmt, ext) {
+      textSlices(spark, dir, 200).map { case (id, pages) => (id, encodeDoc(id, pages)) }
     }
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), s"doc_(\\d+)\\.$ext", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val pages = decodePages(bytes)
@@ -917,32 +907,18 @@ object SourceQueries {
     * whole loader-path contract sits under the bit-exact gate. */
   def docxFullTextRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobRoot = stagedBlobs(dir, "docxfull") { staging =>
-      Tables.documents(spark, dir)
-        .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
-        .filter(size(col("toks")) > 0)
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, (size(toks) - 1) div 10), " +
-            "i -> array_join(slice(toks, i * 10 + 1, 10), ' '))").as("paras"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, paras) =>
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.docx").toPath,
-              graft.sources.Docx.encodeFull(
-                header = Some(s"Header $id"),
-                richPara = Some(graft.sources.Docx.RichPara(
-                  Seq("col1", "col2", "line2"), Seq("\t", "\n"))),
-                paragraphs = paras,
-                tableCells = paras.take(2),
-                footer = Some(s"Footer $id")))
-          }
-        }
+    val blobRoot = stagedDocBlobs(dir, "docxfull", "docx") {
+      textParas(spark, dir, size(col("toks")) > 0).map { case (id, paras) =>
+        (id, graft.sources.Docx.encodeFull(
+          header = Some(s"Header $id"),
+          richPara = Some(graft.sources.Docx.RichPara(
+            Seq("col1", "col2", "line2"), Seq("\t", "\n"))),
+          paragraphs = paras,
+          tableCells = paras.take(2),
+          footer = Some(s"Footer $id")))
+      }
     }
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.docx", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val text = graft.sources.Docx.decodeText(bytes)
@@ -995,28 +971,13 @@ object SourceQueries {
   def htmlExtractRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val constPara = "R&D <ok> \"q\" 10<20 done"
-    val blobRoot = stagedBlobs(dir, "html") { staging =>
-      Tables.documents(spark, dir)
-        .filter(length(col("text")) > 0)
-        .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, (size(toks) - 1) div 10), i -> concat_ws(' ', slice(toks, i * 10 + 1, 10)))")
-          .as("paras"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, paras) =>
-            val page = graft.sources.Html.encodePage(
-              s"Title $id", s"Doc $id", constPara +: paras)
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.html").toPath,
-              page.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        }
+    val blobRoot = stagedDocBlobs(dir, "html", "html") {
+      textParas(spark, dir, length(col("text")) > 0).map { case (id, paras) =>
+        (id, graft.sources.Html.encodePage(s"Title $id", s"Doc $id", constPara +: paras)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
     }
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.html", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val extracted = graft.sources.Html.extractText(
@@ -1066,23 +1027,10 @@ object SourceQueries {
     * reconstruction, padding) breaks the bit-exact match loudly. */
   def pngRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobRoot = stagedBlobs(dir, "png") { staging =>
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("content"))
-        .as[(Long, Array[Byte])]
-        .foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          it.foreach { case (id, bytes) =>
-            val samples = (if (bytes == null) Array.empty[Byte] else bytes).map(b => b & 0xff)
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.png").toPath,
-              Png.encode(samples))
-          }
-        }
+    val blobRoot = stagedDocBlobs(dir, "png", "png") {
+      textSamples(spark, dir).map { case (id, s) => (id, Png.encode(s)) }
     }
-    val blobs = spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.png", 1).cast("long").as("doc_id"),
-        col("content"))
+    val blobs = BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
     val feats = Multimodal.extractFeatures(blobs)
     feats.select(
       col("doc_id"), col("n_samples"),
@@ -1121,40 +1069,32 @@ object SourceQueries {
     // the source-parquet fingerprint, so the family name itself must
     // change whenever codec behavior does, or a stale lake staged by the
     // old encoder silently feeds the new decoder
-    val blobRoot = stagedBlobs(dir, "jpg2") { staging =>
+    val blobRoot = stagedDocBlobs(dir, "jpg2", "jpg") {
       Tables.documents(spark, dir)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, text) =>
-            val v = (id % 5).toInt
-            val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val w = 16 + (id % 240).toInt
-            val h = 16 + (text.length % 480)
-            val orient = Some((id % 8).toInt + 1)
-            val desc = Some(s"doc $id")
-            val com = Some(text.substring(0, math.min(40, text.length)))
-            val bytes = v match {
-              case 0 => Jpeg.encode(payload, w, h, components = 1, comment = com)
-              case 1 => Jpeg.encode(payload, w, h, exifOrientation = orient)
-              case 2 => Jpeg.encode(payload, w, h, progressive = true,
-                exifOrientation = orient, exifBigEndian = true, exifDescription = desc)
-              case 3 => Jpeg.encode(payload, w, h, comment = com, dri = 64,
-                extraDqt = true)
-              case 4 => Jpeg.encode(payload, w, h, components = 1,
-                progressive = true, exifOrientation = orient,
-                exifDescription = desc, dri = 32)
-            }
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.jpg").toPath, bytes)
-          }
+        .map { case (id, text) =>
+          val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          val w = 16 + (id % 240).toInt
+          val h = 16 + (text.length % 480)
+          val orient = Some((id % 8).toInt + 1)
+          val desc = Some(s"doc $id")
+          val com = Some(text.substring(0, math.min(40, text.length)))
+          (id, (id % 5).toInt match {
+            case 0 => Jpeg.encode(payload, w, h, components = 1, comment = com)
+            case 1 => Jpeg.encode(payload, w, h, exifOrientation = orient)
+            case 2 => Jpeg.encode(payload, w, h, progressive = true,
+              exifOrientation = orient, exifBigEndian = true, exifDescription = desc)
+            case 3 => Jpeg.encode(payload, w, h, comment = com, dri = 64,
+              extraDqt = true)
+            case 4 => Jpeg.encode(payload, w, h, components = 1,
+              progressive = true, exifOrientation = orient,
+              exifDescription = desc, dri = 32)
+          })
         }
     }
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.jpg", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val m = Jpeg.decode(bytes)
@@ -1216,32 +1156,18 @@ object SourceQueries {
     * stage; staged once per corpus fingerprint. */
   private def aviLake(spark: SparkSession, dir: String): java.io.File = {
     import spark.implicits._
-    stagedBlobs(dir, "avi") { staging =>
-      Tables.documents(spark, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, length(text) - 1, 200), s -> substring(text, s + 1, 200))")
-          .as("pages"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, pages) =>
-            val frames = pages.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.avi").toPath,
-              graft.sources.Avi.encode(frames,
-                width = 16 + (id % 240).toInt, height = 240, usPerFrame = 33367))
-          }
-        }
+    stagedDocBlobs(dir, "avi", "avi") {
+      textSlices(spark, dir, 200).map { case (id, pages) =>
+        (id, graft.sources.Avi.encode(
+          pages.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+          width = 16 + (id % 240).toInt, height = 240, usPerFrame = 33367))
+      }
     }
   }
 
   def aviFrameSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobRoot = aviLake(spark, dir)
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.avi", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, aviLake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val v = graft.sources.Avi.decode(bytes)
@@ -1283,10 +1209,7 @@ object SourceQueries {
     import spark.implicits._
     val threshold = 300L // |Δ byte-sum| above this = cut (tuned so the
     //                      corpus yields a mix of cut and no-cut pairs)
-    spark.read.format("binaryFile").load(aviLake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.avi", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, aviLake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val v = graft.sources.Avi.decode(bytes)
@@ -1346,22 +1269,11 @@ object SourceQueries {
     * is a genuine interval-overlap problem, not an index match. */
   private def srtLake(spark: SparkSession, dir: String): java.io.File = {
     import spark.implicits._
-    stagedBlobs(dir, "srt") { staging =>
-      Tables.documents(spark, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, length(text) - 1, 120), s -> substring(text, s + 1, 120))")
-          .as("slices"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, slices) =>
-            val cues = slices.zipWithIndex.map { case (t, j) =>
-              (j * 30L, j * 30L + 25L, t) }
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.srt").toPath,
-              graft.sources.Srt.encode(cues))
-          }
-        }
+    stagedDocBlobs(dir, "srt", "srt") {
+      textSlices(spark, dir, 120).map { case (id, slices) =>
+        (id, graft.sources.Srt.encode(
+          slices.zipWithIndex.map { case (t, j) => (j * 30L, j * 30L + 25L, t) }))
+      }
     }
   }
 
@@ -1382,10 +1294,7 @@ object SourceQueries {
   def subtitleAlign(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val uspf = 33367L
-    val scenes = spark.read.format("binaryFile").load(aviLake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.avi", 1).cast("long").as("doc_id"),
-        col("content"))
+    val scenes = BlobDataSource.docBlobs(spark, aviLake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val v = graft.sources.Avi.decode(bytes)
@@ -1394,10 +1303,7 @@ object SourceQueries {
         val bounds = (0 +: cuts) :+ ms.length
         (id, bounds.sliding(2).map { w => SceneSpan(w.head * uspf, w.last * uspf) }.toSeq)
       }.toDF("doc_id", "scenes")
-    val cues = spark.read.format("binaryFile").load(srtLake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.srt", 1).cast("long").as("doc_id"),
-        col("content"))
+    val cues = BlobDataSource.docBlobs(spark, srtLake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .flatMap { case (id, bytes) =>
         graft.sources.Srt.decode(bytes).map(c =>
@@ -1476,30 +1382,23 @@ object SourceQueries {
     * census shuffles (q60u's embarrassingly-parallel shape). */
   private def mp3Lake(spark: SparkSession, dir: String): java.io.File = {
     import spark.implicits._
-    stagedBlobs(dir, "mp3") { staging =>
+    stagedDocBlobs(dir, "mp3", "mp3") {
       Tables.documents(spark, dir)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"), expr("CAST((length(text) + 199) div 200 AS INT)").as("nf"))
         .as[(Long, Int)]
-        .foreachPartition { it: Iterator[(Long, Int)] =>
-          it.foreach { case (id, nf) =>
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.mp3").toPath,
-              graft.sources.Mp3.encode(nf,
-                bitrateIdx = 1 + (id % 14).toInt,
-                sampleRateIdx = (id % 3).toInt,
-                padding = id % 2 == 1, seed = id))
-          }
+        .map { case (id, nf) =>
+          (id, graft.sources.Mp3.encode(nf,
+            bitrateIdx = 1 + (id % 14).toInt,
+            sampleRateIdx = (id % 3).toInt,
+            padding = id % 2 == 1, seed = id))
         }
     }
   }
 
   def mp3Census(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(mp3Lake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.mp3", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, mp3Lake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val frames = graft.sources.Mp3.decode(bytes)
@@ -1547,34 +1446,26 @@ object SourceQueries {
     * (q152's embarrassingly-parallel shape); only the census shuffles. */
   private def mp4Lake(spark: SparkSession, dir: String): java.io.File = {
     import spark.implicits._
-    stagedBlobs(dir, "mp4") { staging =>
+    stagedDocBlobs(dir, "mp4", "mp4") {
       Tables.documents(spark, dir)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"), length(col("text")).cast("long").as("n"))
         .as[(Long, Long)]
-        .foreachPartition { it: Iterator[(Long, Long)] =>
-          it.foreach { case (id, n) =>
-            val nf = (n + 199) / 200
-            val payload = Array.tabulate((n % 200).toInt + 1)(i => ((id + i) % 251).toByte)
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.mp4").toPath,
-              graft.sources.Mp4.encode(
-                brand = if (id % 2 == 0) "isom" else "mp42",
-                timescale = 1000L,
-                durationTicks = math.max(nf * 40L, n),
-                tracks = Seq(("vide", 90000L, nf * 3600L), ("soun", 48000L, n * 48L)),
-                mdat = payload))
-          }
+        .map { case (id, n) =>
+          val nf = (n + 199) / 200
+          (id, graft.sources.Mp4.encode(
+            brand = if (id % 2 == 0) "isom" else "mp42",
+            timescale = 1000L,
+            durationTicks = math.max(nf * 40L, n),
+            tracks = Seq(("vide", 90000L, nf * 3600L), ("soun", 48000L, n * 48L)),
+            mdat = Array.tabulate((n % 200).toInt + 1)(i => ((id + i) % 251).toByte)))
         }
     }
   }
 
   def mp4Census(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(mp4Lake(spark, dir).getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.mp4", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, mp4Lake(spark, dir).getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val m = graft.sources.Mp4.decode(bytes)
@@ -2120,25 +2011,10 @@ object SourceQueries {
     * can recompute the identical checksum from `documents.text`. */
   def pdfPreview(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobRoot = stagedBlobs(dir, "pdf") { staging =>
-      Tables.documents(spark, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), expr(
-          "transform(sequence(0, length(text) - 1, 200), s -> substring(text, s + 1, 200))")
-          .as("pages"))
-        .as[(Long, Seq[String])]
-        .foreachPartition { it: Iterator[(Long, Seq[String])] =>
-          it.foreach { case (id, pages) =>
-            java.nio.file.Files.write(
-              new java.io.File(staging, f"doc_$id%06d.pdf").toPath,
-              graft.sources.Pdf.encode(pages))
-          }
-        }
+    val blobRoot = stagedDocBlobs(dir, "pdf", "pdf") {
+      textSlices(spark, dir, 200).map { case (id, pages) => (id, graft.sources.Pdf.encode(pages)) }
     }
-    spark.read.format("binaryFile").load(blobRoot.getAbsolutePath)
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.pdf", 1).cast("long").as("doc_id"),
-        col("content"))
+    BlobDataSource.docBlobs(spark, blobRoot.getAbsolutePath)
       .as[(Long, Array[Byte])]
       .map { case (id, bytes) =>
         val page1 = graft.sources.Pdf.decodePages(bytes).head

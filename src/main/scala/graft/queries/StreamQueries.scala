@@ -353,11 +353,10 @@ object StreamQueries {
     * of events — the measured r19-baseline cost class (q123 6.97 s /
     * q128 10.10 s while the same join SHAPE in batch, q55/q55b, runs
     * ~0.3 s). State volume tracks source bytes, so with two measured
-    * constants — a 64 MB/partition ceiling target
-    * (`SPARK_GRAFT_STREAM_STATE_TARGET_BYTES`, the usual shuffle-partition
-    * sizing band) and a 256 KB/partition bring-up floor
-    * (`SPARK_GRAFT_STREAM_STATE_MIN_BYTES`: below that a partition's
-    * per-row put workload costs less than its store's bring-up, so more
+    * constants — a 64 MB/partition ceiling target (`StateTargetBytes`,
+    * the usual shuffle-partition sizing band) and a 256 KB/partition
+    * bring-up floor (`StateMinBytes`: below that a partition's per-row
+    * put workload costs less than its store's bring-up, so more
     * partitions only add overhead; constants sized by a 1/4/8/32-partition
     * sweep at sf0.1, OPTIMIZATION_r19.md) —
     *   floor = min(cores, ceil(bytes / 256 KB))  // keep cores busy, never
@@ -407,14 +406,13 @@ object StreamQueries {
     if (bytes < 0) math.max(1, cores)
     else adaptiveStateParts(bytes, cores, target, minBytes)
 
+  private val StateTargetBytes = 64L * 1024 * 1024
+  private val StateMinBytes = 256L * 1024
+
   private[graft] def withAdaptiveStateParts[T](spark: SparkSession, dir: String)(body: => T): T = {
     val bytes = sourceBytes(spark, s"$dir/events.parquet")
-    val target = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_TARGET_BYTES",
-      (64L * 1024 * 1024).toString).toLong
-    val minBytes = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_MIN_BYTES",
-      (256L * 1024).toString).toLong
     val parts = statePartsFor(bytes,
-      spark.sparkContext.defaultParallelism, target, minBytes)
+      spark.sparkContext.defaultParallelism, StateTargetBytes, StateMinBytes)
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, parts.toString)

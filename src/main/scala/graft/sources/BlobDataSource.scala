@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -52,6 +53,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     grouped by `ext` — are answered from the LISTING alone, complete
   *     (not partial) pushdown: a "how big is this lake" rollup over a
   *     billion blobs is one metadata pass, zero file opens, one row out.
+  *
+  * The sink is the one writer of `doc_<id>.<ext>` lakes: every staged
+  * doc-blob lake in `queries/` writes through it
+  * (`SourceQueries.stagedDocBlobs`), and it refuses a row whose name its
+  * own listing could not read back (a negative id, an `ext` outside
+  * `[A-Za-z0-9]+`). Those lakes are read back by [[BlobDataSource.docBlobs]],
+  * the one parser of their names, which stays on Spark's `binaryFile`
+  * source: this scan's size packing puts a lake of KB-sized blobs into
+  * one task, while `binaryFile` splits it across the cores.
   */
 class BlobDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -158,7 +168,19 @@ object BlobDataSource {
     StructField("length", LongType, nullable = false),
     StructField("content", BinaryType, nullable = false)))
 
-  private val FileName = "doc_(\\d+)\\.([A-Za-z0-9]+)".r
+  private[sources] val FileName = "doc_(\\d+)\\.([A-Za-z0-9]+)".r
+
+  /** A doc-blob lake as `(doc_id LONG, content BINARY)`, one row per
+    * `doc_<id>.<ext>` file, `doc_id` parsed from the file name by
+    * [[FileName]]. A `binaryFile` read, so the files split across tasks
+    * the way Spark splits any file source. */
+  def docBlobs(spark: SparkSession, root: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    spark.read.format("binaryFile").load(root)
+      .select(
+        regexp_extract(col("path"), s"/${FileName.regex}$$", 1).cast("long").as("doc_id"),
+        col("content"))
+  }
 
   /** One listed blob; `path` (not a File handle) so partitions serialize. */
   final case class BlobFile(path: String, docId: Long, ext: String, size: Long)
@@ -468,6 +490,12 @@ private[sources] class BlobWriterFactory(path: String, idIdx: Int, extIdx: Int, 
         val id = row.getLong(idIdx)
         val ext = row.getUTF8String(extIdx).toString
         val fin = f"doc_$id%06d.$ext"
+        // a name the listing does not match would commit and then drop
+        // out of every read: fail the task instead
+        if (!BlobDataSource.FileName.pattern.matcher(fin).matches())
+          throw new IllegalArgumentException(s"graftblob write: (doc_id=$id, ext=$ext) " +
+            "gives a blob name the listing cannot read back (doc_id must be >= 0, " +
+            "ext must match [A-Za-z0-9]+)")
         // attempt id in the temp name: a speculated twin task never
         // collides, and only one twin's commit message reaches commit()
         val tmp = s".$fin.$taskId.tmp"

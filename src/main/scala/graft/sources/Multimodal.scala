@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns — binary payloads with typed metadata (builder
   * mandate: image/audio/video as opaque BINARY + decode/feature/resize/
@@ -30,20 +29,6 @@ import org.apache.spark.sql.types._
   * is format-agnostic.
   */
 object Multimodal {
-
-  val featureSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("n_samples", LongType, nullable = false),
-    StructField("b0", DoubleType, nullable = false),
-    StructField("b1", DoubleType, nullable = false),
-    StructField("b2", DoubleType, nullable = false),
-    StructField("b3", DoubleType, nullable = false),
-    StructField("b4", DoubleType, nullable = false),
-    StructField("b5", DoubleType, nullable = false),
-    StructField("b6", DoubleType, nullable = false),
-    StructField("b7", DoubleType, nullable = false),
-    StructField("frame_checksum", LongType, nullable = false),
-    StructField("n_frames", LongType, nullable = false)))
 
   private def le16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)

@@ -24,10 +24,10 @@ class StagedFamiliesSpec extends AnyFunSuite {
     // checked across every entry point (blob lakes, bucketed tables,
     // stream roots): they all share Staging.root. The family is the first
     // string literal, after any plain identifiers.
-    val pat = """\b(stagedBlobs|Staging\.staged|Staging\.stableRoot|Staging\.bucketedTable)\(\s*(?:\w+\s*,\s*)*"([a-z0-9_]+)"""".r
+    val pat = """\b(stagedBlobs|stagedDocBlobs|Staging\.staged|Staging\.stableRoot|Staging\.bucketedTable)\(\s*(?:\w+\s*,\s*)*"([a-z0-9_]+)"""".r
     val uses = sources("src/main/scala").flatMap { case (p, text) =>
       pat.findAllMatchIn(text).map { m =>
-        val family = if (m.group(1) == "stagedBlobs") s"blobs_${m.group(2)}" else m.group(2)
+        val family = if (m.group(1).startsWith("staged")) s"blobs_${m.group(2)}" else m.group(2)
         (m.group(1), family, p.getFileName.toString)
       }
     }
@@ -36,7 +36,7 @@ class StagedFamiliesSpec extends AnyFunSuite {
       s"staged families reused across call sites: " +
         dup.map { case (f, sites) => s"$f -> ${sites.map(_._3).mkString(",")}" }
           .mkString("; "))
-    for (entry <- Seq("stagedBlobs", "Staging.staged", "Staging.stableRoot",
+    for (entry <- Seq("stagedBlobs", "stagedDocBlobs", "Staging.staged", "Staging.stableRoot",
         "Staging.bucketedTable"))
       assert(uses.exists(_._1 == entry), s"no $entry call sites found — pattern rotted")
   }

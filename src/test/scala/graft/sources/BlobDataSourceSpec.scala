@@ -116,6 +116,29 @@ class BlobDataSourceSpec extends SparkSuite {
     assert(spark.read.format("graftblob").load(dir.getAbsolutePath).count() === 6)
   }
 
+  test("write path: the sink refuses a row whose name its listing cannot read back") {
+    import spark.implicits._
+    // a negative id formats as doc_-00005 and a dotted ext as doc_<id>.tar.gz:
+    // neither matches doc_<digits>.<alnum>, so a committed blob would drop
+    // out of every read without an error
+    for ((badId, badExt) <- Seq((-5L, "bin"), (7L, "tar.gz"))) {
+      val dir = java.nio.file.Files.createTempDirectory("graftblob_badname").toFile
+      val rows = (0L until 3L).map(i => (i, "bin", Array.fill[Byte](4)(i.toByte))) :+
+        ((badId, badExt, Array[Byte](9)))
+      val written = scala.util.Try(
+        rows.toDF("doc_id", "ext", "content")
+          .withColumn("length", length(col("content")).cast("long"))
+          .write.format("graftblob").mode("append").save(dir.getAbsolutePath))
+      val back = spark.read.format("graftblob").load(dir.getAbsolutePath).count()
+      assert(written.isFailure,
+        s"(doc_id=$badId, ext=$badExt): write succeeded but read back $back of ${rows.size} rows")
+      val causes = Iterator.iterate(written.failed.get: Throwable)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(e => Option(e.getMessage).exists(_.contains(s"(doc_id=$badId, ext=$badExt)"))),
+        written.failed.get.toString)
+      assert(back === 0, "a failed write must publish nothing")
+    }
+  }
+
   test("runtime filtering: a joined dim's keys re-filter the listing at execution") {
     import spark.implicits._
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
